@@ -259,7 +259,9 @@ object Bench {
       case Some((viol, rc, agg)) =>
         s"""{"status":"${if (rc == 0) "ok" else "violations"}","n_violations":${viol.size},"aggregate_vs_pins":$agg}"""
     }
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_failed":${failed.size},"protocol":"$protocol","baseline_gate":$summaryGate,"sf":"$sfDir","cpus":$cpus}""")
+    // a SPARK_GRAFT_ONLY run times a subset: its total is not the sweep's
+    val partial = if (only.isDefined) ""","partial":true""" else ""
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_failed":${failed.size},"protocol":${jstr(protocol)},"baseline_gate":$summaryGate,"sf":${jstr(sfDir)},"cpus":$cpus$partial}""")
     spark.stop()
     gateResult.map(_._2).filter(_ != 0).foreach(_ => sys.exit(1))
   }

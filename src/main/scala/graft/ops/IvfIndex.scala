@@ -902,6 +902,11 @@ object IvfIndex {
     val staging = s"$dir/$SplitStaging"
     val stagingPath = new org.apache.hadoop.fs.Path(staging)
     if (hfs.exists(stagingPath)) hfs.delete(stagingPath, true) // pre-marker crash leftovers
+    // the victim writes below use mode("append"): stale component rows
+    // left under the staging root would be appended to, not replaced
+    require(!hfs.exists(stagingPath),
+      s"splitCells: split staging $staging still exists after its delete; " +
+        "appending the new components to leftover rows would corrupt the split")
     val newCenters = scala.collection.mutable.ArrayBuffer(oldCenters.toSeq: _*)
     val splitDone = scala.collection.mutable.ArrayBuffer.empty[Int]
     def d2(a: Seq[Double], b: Array[Double]): Double = {

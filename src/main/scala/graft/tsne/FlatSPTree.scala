@@ -1,6 +1,8 @@
 package graft.tsne
 
-/** Struct-of-arrays form of [[SPTree]] for the per-iteration broadcast.
+/** Struct-of-arrays form of [[SPTree]]: [[BHTSNE]] builds one on the
+  * driver each iteration and broadcasts it together with a copy of Y, in
+  * the iteration's single broadcast.
   *
   * The pointer tree costs ~21 ms to build at n=16k but ~140 ms to
   * broadcast: Kryo walks ~10⁵ small node objects every iteration
@@ -8,7 +10,9 @@ package graft.tsne
   * serialization is a memcpy — and the executor-side traversal is the
   * same Barnes-Hut criterion over indices (children of a subdivided node
   * are 2^d consecutive slots, DFS order for locality; radius² is
-  * precomputed per node instead of per visit).
+  * precomputed per node instead of per visit). `nonEdgeForces` writes at
+  * a caller-given offset, so a task accumulates its rows' repulsive
+  * forces into a partition-local buffer, not an n×d one.
   *
   * Built FROM the verified pointer tree, so all build conventions
   * (midpoint→lower cell, duplicate accumulation, bbox) are inherited;

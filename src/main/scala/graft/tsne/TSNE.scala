@@ -1,5 +1,6 @@
 package graft.tsne
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -207,10 +208,16 @@ object SimpleTSNE {
   }
 }
 
-/** Barnes-Hut t-SNE (reference impl/BHTSNE.scala): one job per iteration —
-  * treeAggregate of (posF, negF, sumQ); the driver builds the SPTree from
-  * Y (O(n log n) local) and broadcasts tree + Y; dY = posF − negF/sumQ
-  * (reference :66, learning-rate factor absorbed into η).
+/** Barnes-Hut t-SNE (reference impl/BHTSNE.scala): one Spark job per
+  * iteration. The driver builds the [[FlatSPTree]] from Y (O(n log n)
+  * local) and broadcasts it once, together with a copy of Y. Each
+  * partition returns only its own rows' posF and negF plus its sumQ and
+  * raw loss ([[BHTSNE.Partial]]); the driver sums sumQ and the loss in
+  * partition-index order and scatters dY = posF − negF/sumQ by row index
+  * (reference :66, learning-rate factor absorbed into η). Nothing n-sized
+  * is shipped to or returned from a task, and the combine order is fixed,
+  * so for a one-partition adjacency the iteration is bit-identical to a
+  * driver-local loop over the rows.
   *
   * NOTE: like the reference (and van der Maaten's canonical Barnes-Hut
   * implementation), this driver omits the factor 4 that SimpleTSNE's
@@ -220,6 +227,70 @@ object SimpleTSNE {
   */
 object BHTSNE {
 
+  /** One partition's share of a BH gradient: the indices of its rows (in
+    * partition order), their attractive and repulsive forces (d values
+    * per row, same order), and the partition's Σq and raw loss. */
+  private[tsne] final case class Partial(
+      rows: Array[Int], posF: Array[Double], negF: Array[Double],
+      sumQ: Double, rawLoss: Double)
+
+  /** The per-partition kernel: forces for `rows` into row-local buffers. */
+  private[tsne] def partial(
+      rows: Iterator[AffRow], y: Array[Double], tree: FlatSPTree, d: Int,
+      theta: Double, exag: Double, wantLoss: Boolean): Partial = {
+    val rs = rows.toArray
+    val idx = new Array[Int](rs.length)
+    val posF = new Array[Double](rs.length * d)
+    val negF = new Array[Double](rs.length * d)
+    var sumQ = 0.0
+    var rawLoss = 0.0
+    var r = 0
+    while (r < rs.length) {
+      val row = rs(r)
+      idx(r) = row.i
+      sumQ += tree.nonEdgeForces(TSNEKernels.rowOf(y, d, row.i), theta, negF, r * d)
+      rawLoss += TSNEKernels.edgeForcesRow(y, d, row, exag, posF, r * d, wantLoss)
+      r += 1
+    }
+    Partial(idx, posF, negF, sumQ, rawLoss)
+  }
+
+  /** One BH gradient over the adjacency: (dY, sumQ, raw loss). One
+    * broadcast and one job; every point without an adjacency row gets
+    * dY = 0. */
+  private[tsne] def gradient(
+      rdd: RDD[AffRow], y: Array[Double], n: Int, d: Int,
+      theta: Double, exag: Double, wantLoss: Boolean): (Array[Double], Double, Double) = {
+    val sc = rdd.sparkContext
+    // the struct-of-arrays tree: serializing the pointer tree dominated
+    // the iteration (~140 ms vs ~20 ms build at n=16k)
+    val bc = sc.broadcast((y.clone(), FlatSPTree.build(y, n, d)))
+    val parts =
+      try sc.runJob(rdd, (it: Iterator[AffRow]) => {
+        val (yb, tree) = bc.value
+        partial(it, yb, tree, d, theta, exag, wantLoss)
+      })
+      finally bc.destroy()
+
+    var sumQ = 0.0
+    var rawLoss = 0.0
+    parts.foreach { p => sumQ += p.sumQ; rawLoss += p.rawLoss }
+    val dY = new Array[Double](n * d)
+    parts.foreach { p =>
+      var r = 0
+      while (r < p.rows.length) {
+        val base = p.rows(r) * d
+        var k = 0
+        while (k < d) {
+          dY(base + k) = p.posF(r * d + k) - p.negF(r * d + k) / sumQ
+          k += 1
+        }
+        r += 1
+      }
+    }
+    (dY, sumQ, rawLoss)
+  }
+
   def tsne(
       points: DataFrame,
       idCol: String = "id",
@@ -227,7 +298,6 @@ object BHTSNE {
       params: TSNEParams = TSNEParams(maxIterations = 500),
       callback: TSNE.Callback = TSNE.NoopCallback): DataFrame = {
     val spark = points.sparkSession
-    val sc = spark.sparkContext
     val (adj, n, idMap) = TSNE.prepareAffinities(points, idCol, featuresCol, params)
     val d = params.dims
 
@@ -245,31 +315,7 @@ object BHTSNE {
     while (iter <= params.maxIterations) {
       val exag = if (iter <= params.earlyExaggeration) params.exaggerationFactor else 1.0
       val wantLoss = params.reportLoss > 0 && iter % params.reportLoss == 0
-      val bcY = sc.broadcast(y)
-      // broadcast the struct-of-arrays tree: serializing the pointer tree
-      // dominated the iteration (~140 ms vs ~20 ms build at n=16k)
-      val bcTree = sc.broadcast(FlatSPTree.build(y, n, d))
-
-      val (posF, negF, sumQ, rawLoss) =
-        rdd.treeAggregate((new Array[Double](n * d), new Array[Double](n * d), 0.0, 0.0))(
-          seqOp = (acc, row) => {
-            val q = bcTree.value.nonEdgeForces(
-              TSNEKernels.rowOf(bcY.value, d, row.i), params.theta, acc._2, row.i * d)
-            val l = TSNEKernels.edgeForcesRow(bcY.value, d, row, exag, acc._1, wantLoss)
-            (acc._1, acc._2, acc._3 + q, acc._4 + l)
-          },
-          combOp = (a, b) => {
-            TSNEKernels.addInPlace(a._1, b._1)
-            TSNEKernels.addInPlace(a._2, b._2)
-            (a._1, a._2, a._3 + b._3, a._4 + b._4)
-          })
-
-      bcY.destroy()
-      bcTree.destroy()
-
-      val dY = new Array[Double](n * d)
-      var k = 0
-      while (k < dY.length) { dY(k) = posF(k) - negF(k) / sumQ; k += 1 }
+      val (dY, sumQ, rawLoss) = gradient(rdd, y, n, d, params.theta, exag, wantLoss)
 
       // KL(P‖Q) with q = num/sumQ: Σ p(log p − log num) + log(sumQ)·Σp,
       // and Σp = exag (symmetrized P sums to 1 before exaggeration).

@@ -117,14 +117,17 @@ object TSNEKernels {
     loss
   }
 
-  /** Attractive (edge) forces for one row, accumulated into posF
-    * (reference computeEdgeForces, TSNEGradient.scala:86-97):
+  /** Attractive (edge) forces for one row, accumulated into posF at
+    * `off` (reference computeEdgeForces, TSNEGradient.scala:86-97):
     *   posF_i = Σ_j p_ij · (1+‖y_i−y_j‖²)⁻¹ · (y_i − y_j).
+    * `off` = i·d writes into an n×d buffer; the BH driver passes the
+    * row's slot in a partition-local buffer instead (the
+    * FlatSPTree.nonEdgeForces convention).
     * When wantLoss, returns Σ_j p·(log max(p,1e-12) − log num); the
     * caller completes KL with + Σp·log(sumQ) once global sumQ is known. */
   def edgeForcesRow(
       y: Array[Double], d: Int, row: AffRow,
-      exag: Double, posF: Array[Double], wantLoss: Boolean): Double = {
+      exag: Double, posF: Array[Double], off: Int, wantLoss: Boolean): Double = {
     val i = row.i
     val base = i * d
     val js = row.js
@@ -145,7 +148,7 @@ object TSNEKernels {
       val mult = p * num
       k = 0
       while (k < d) {
-        posF(base + k) += mult * (y(base + k) - y(jj * d + k))
+        posF(off + k) += mult * (y(base + k) - y(jj * d + k))
         k += 1
       }
       if (wantLoss) loss += p * (math.log(math.max(p, Clamp)) - math.log(num))

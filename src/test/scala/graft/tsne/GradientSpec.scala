@@ -98,7 +98,7 @@ class GradientSpec extends AnyFunSuite {
     var sumQ = 0.0
     rows.foreach { r =>
       sumQ += tree.nonEdgeForces(TSNEKernels.rowOf(y, d, r.i), 0.0, negF, r.i * d)
-      TSNEKernels.edgeForcesRow(y, d, r, 1.0, posF, wantLoss = false)
+      TSNEKernels.edgeForcesRow(y, d, r, 1.0, posF, r.i * d, wantLoss = false)
     }
     for (k <- 0 until n * d) {
       val bh = 4.0 * (posF(k) - negF(k) / sumQ)
