@@ -70,24 +70,31 @@ final class FlatSPTree(
 object FlatSPTree {
 
   /** Flatten a built pointer tree (DFS preorder; a subdivided node's 2^d
-    * children occupy consecutive slots). */
+    * children occupy consecutive slots): one walk counts the nodes, a
+    * second fills exact-size primitive arrays. */
   def from(t: SPTree): FlatSPTree = {
     val d = t.dim
-    val com = new scala.collection.mutable.ArrayBuffer[Double](1024)
-    val radius2 = new scala.collection.mutable.ArrayBuffer[Double](256)
-    val cumSize = new scala.collection.mutable.ArrayBuffer[Int](256)
-    val childBase = new scala.collection.mutable.ArrayBuffer[Int](256)
+    def count(node: SPTree): Int =
+      if (node.isLeaf) 1 else { var c = 1; node.children.foreach(ch => c += count(ch)); c }
+    val nodes = count(t)
+    val com = new Array[Double](nodes * d)
+    val radius2 = new Array[Double](nodes)
+    val cumSize = new Array[Int](nodes)
+    val childBase = Array.fill(nodes)(-1)
+    var next = 0
 
     def alloc(node: SPTree): Int = {
-      val idx = cumSize.length
-      var k = 0
-      while (k < d) { com += node.centerOfMass(k); k += 1 }
+      val idx = next
+      next += 1
       var r2 = 0.0
-      k = 0
-      while (k < d) { r2 += node.width(k) * node.width(k); k += 1 }
-      radius2 += r2
-      cumSize += node.cumSize
-      childBase += -1
+      var k = 0
+      while (k < d) {
+        com(idx * d + k) = node.centerOfMass(k)
+        r2 += node.width(k) * node.width(k)
+        k += 1
+      }
+      radius2(idx) = r2
+      cumSize(idx) = node.cumSize
       idx
     }
 
@@ -102,9 +109,8 @@ object FlatSPTree {
         while (ci < node.children.length) { walk(node.children(ci), base + ci); ci += 1 }
       }
 
-    val root = alloc(t)
-    walk(t, root)
-    new FlatSPTree(d, com.toArray, radius2.toArray, cumSize.toArray, childBase.toArray)
+    walk(t, alloc(t))
+    new FlatSPTree(d, com, radius2, cumSize, childBase)
   }
 
   /** Build directly from an embedding (the BHTSNE per-iteration path). */

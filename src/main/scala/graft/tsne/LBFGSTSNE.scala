@@ -25,10 +25,10 @@ import org.apache.spark.sql.DataFrame
   *     KL surface is nearly flat (Q ≈ uniform) and line-search
   *     convergence criteria fire before the layout expands.
   *
-  * Distribution shape is identical to SimpleTSNE: two jobs per
-  * evaluation over the cached adjacency (global Z, then gradient + loss
-  * into an n×d buffer via treeAggregate with in-place merges); L-BFGS
-  * state (history of m gradient pairs) is driver-local, n×d×m doubles.
+  * Distribution shape is identical to SimpleTSNE: each evaluation is one
+  * [[SimpleTSNE.gradient]] (two jobs) over one cached adjacency RDD,
+  * released in `finally` ([[TSNE.run]]); L-BFGS state (history of m
+  * gradient pairs) is driver-local, n×d×m doubles.
   */
 object LBFGSTSNE {
 
@@ -40,73 +40,43 @@ object LBFGSTSNE {
       idCol: String = "id",
       featuresCol: String = "features",
       params: TSNEParams = TSNEParams(),
-      callback: TSNE.Callback = TSNE.NoopCallback): DataFrame = {
-    val spark = points.sparkSession
-    val sc = spark.sparkContext
-    val (adj, n, idMap) = TSNE.prepareAffinities(points, idCol, featuresCol, params)
-    val d = params.dims
-
-    val rdd = adj.rdd.cache()
-    rdd.count()
-    adj.unpersist()
-
-    // one distributed (loss, gradient) evaluation at Y = y
-    def lossGrad(y: Array[Double], exag: Double): (Double, Array[Double]) = {
-      val bcY = sc.broadcast(y)
-      val sumZ = rdd.treeAggregate(0.0)(
-        seqOp = (acc, row) => acc + TSNEKernels.rowNumeratorSum(bcY.value, n, d, row.i),
-        combOp = _ + _)
-      val (dY, loss) = rdd.treeAggregate((new Array[Double](n * d), 0.0))(
-        seqOp = (acc, row) => {
-          val l = TSNEKernels.exactGradientRow(
-            bcY.value, n, d, row, sumZ, exag, acc._1, repulseScale = exag)
-          (acc._1, acc._2 + l)
-        },
-        combOp = (a, b) => {
-          TSNEKernels.addInPlace(a._1, b._1)
-          (a._1, a._2 + b._2)
-        })
-      bcY.destroy()
-      (loss, dY)
-    }
-
-    var iteration = 0
-    def optimize(y0: Array[Double], exag: Double, maxIter: Int): Array[Double] = {
-      if (maxIter <= 0) return y0
-      val costFun = new DiffFunction[DenseVector[Double]] {
-        override def calculate(w: DenseVector[Double]): (Double, DenseVector[Double]) = {
-          val (l, g) = lossGrad(w.toArray, exag)
-          (l, DenseVector(g))
+      callback: TSNE.Callback = TSNE.NoopCallback): DataFrame =
+    TSNE.run(points, idCol, featuresCol, params) { (rdd, n) =>
+      val d = params.dims
+      var iteration = 0
+      def optimize(y0: Array[Double], exag: Double, maxIter: Int): Array[Double] = {
+        if (maxIter <= 0) return y0
+        val costFun = new DiffFunction[DenseVector[Double]] {
+          override def calculate(w: DenseVector[Double]): (Double, DenseVector[Double]) = {
+            val (g, l) = SimpleTSNE.gradient(rdd, w.toArray, n, d, exag, repulseScale = exag)
+            (l, DenseVector(g))
+          }
         }
-      }
-      val opt = new BreezeLBFGS[DenseVector[Double]](maxIter, NumCorrections, ConvergenceTol)
-      val states = opt.iterations(new CachedDiffFunction(costFun), DenseVector(y0.clone()))
-      var last = y0
-      try {
-        while (states.hasNext) {
-          val st = states.next()
-          last = st.x.toArray
-          iteration += 1
-          callback(iteration, last.clone(), Some(st.value))
+        val opt = new BreezeLBFGS[DenseVector[Double]](maxIter, NumCorrections, ConvergenceTol)
+        val states = opt.iterations(new CachedDiffFunction(costFun), DenseVector(y0.clone()))
+        var last = y0
+        try {
+          while (states.hasNext) {
+            val st = states.next()
+            last = st.x.toArray
+            iteration += 1
+            callback(iteration, last.clone(), Some(st.value))
+          }
+        } catch {
+          // breeze throws on irrecoverable line-search failures near the
+          // optimum; the last accepted iterate is the answer
+          case _: breeze.optimize.FirstOrderException => ()
         }
-      } catch {
-        // breeze throws on irrecoverable line-search failures near the
-        // optimum; the last accepted iterate is the answer
-        case _: breeze.optimize.FirstOrderException => ()
+        last
       }
-      last
+
+      val phase1Iters = math.min(params.earlyExaggeration, params.maxIterations)
+      // unit-scale init: at the momentum drivers' 1e-4 scale all points are
+      // near-coincident, Q is ~uniform and KL ~flat, and a line-search
+      // optimizer declares convergence before escaping; momentum GD only
+      // escapes because eta amplifies the tiny gradients over many steps
+      val y0 = TSNE.gaussianInit(n, d, params.seed, 1.0)
+      val yExag = optimize(y0, params.exaggerationFactor, phase1Iters)
+      optimize(yExag, 1.0, params.maxIterations - phase1Iters)
     }
-
-    val phase1Iters = math.min(params.earlyExaggeration, params.maxIterations)
-    // unit-scale init: at the momentum drivers' 1e-4 scale all points are
-    // near-coincident, Q is ~uniform and KL ~flat, and a line-search
-    // optimizer declares convergence before escaping; momentum GD only
-    // escapes because eta amplifies the tiny gradients over many steps
-    val y0 = TSNE.gaussianInit(n, d, params.seed, 1.0)
-    val yExag = optimize(y0, params.exaggerationFactor, phase1Iters)
-    val y = optimize(yExag, 1.0, params.maxIterations - phase1Iters)
-
-    rdd.unpersist()
-    TSNE.toDF(spark, y, idMap, d)
-  }
 }

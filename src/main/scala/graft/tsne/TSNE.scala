@@ -1,19 +1,23 @@
 package graft.tsne
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** One sparse-affinity adjacency row: dense point index + sorted neighbor
   * indices and their symmetrized probabilities. */
 case class AffRow(i: Int, js: Array[Int], ps: Array[Double])
 
-/** Per-iteration callback: (iteration, embedding n×d row-major, loss). */
 object TSNE {
+  /** Per-iteration callback: (iteration, embedding n×d row-major, loss). */
   type Callback = (Int, Array[Double], Option[Double]) => Unit
   val NoopCallback: Callback = (_, _, _) => ()
 
-  /** Prepare (id, features) into dense 0..n-1 indices + cached adjacency.
+  /** Prepare (id, features) into dense 0..n-1 indices + the one cached
+    * adjacency RDD the iterations run over: (adjacency, n, idMap). The
+    * caller owns the returned cache and unpersists it (`run` does, in
+    * `finally`); the intermediate indexed-points cache is released here,
+    * in `finally`.
     *
     * Dense indices are required because the embedding Y is a driver-side
     * flat matrix indexed positionally (SURVEY §1.4). The reference gets
@@ -30,7 +34,7 @@ object TSNE {
       points: DataFrame,
       idCol: String,
       featuresCol: String,
-      params: TSNEParams): (Dataset[AffRow], Int, Array[Long]) = {
+      params: TSNEParams): (RDD[AffRow], Int, Array[Long]) = {
     val spark = points.sparkSession
     import spark.implicits._
 
@@ -57,60 +61,89 @@ object TSNE {
         idMap.toSeq.zipWithIndex.map { case (o, i) => (o, i.toLong) })
       .toDF("orig_id", "id")
     val indexed = base.join(broadcast(mapDf), "orig_id").cache()
-
-    // right-size iteration partitions: each per-iteration job pays a task
-    // per partition, and adjacency rows are tiny (~k neighbors each) —
-    // target ≥256 rows/task instead of inheriting shuffle.partitions
-    val iterParts = math.max(1, math.min(
-      spark.sparkContext.defaultParallelism, n / 256))
-    val bucket =
-      if (params.approxKnn)
-        Some(params.approxKnnBucketLength.getOrElse(
-          KNN.autoBucketLength(indexed, "features")))
-      else None
-    val adj = Affinities.computeP(
-        indexed, n.toLong, "id", "features", params.perplexity, params.tol, bucket)
-      .select(
-        col("i").cast("int").as("i"),
-        col("js").cast("array<int>").as("js"),
-        col("ps"))
-      .as[AffRow]
-      .repartition(iterParts)
-      .cache()
-    adj.count() // materialize before the iteration loop
-    indexed.unpersist()
-    (adj, n, idMap)
+    try {
+      // right-size iteration partitions: each per-iteration job pays a task
+      // per partition, and adjacency rows are tiny (~k neighbors each) —
+      // target ≥256 rows/task instead of inheriting shuffle.partitions
+      val iterParts = math.max(1, math.min(
+        spark.sparkContext.defaultParallelism, n / 256))
+      val bucket =
+        if (params.approxKnn)
+          Some(params.approxKnnBucketLength.getOrElse(
+            KNN.autoBucketLength(indexed, "features")))
+        else None
+      val adj = Affinities.computeP(
+          indexed, n.toLong, "id", "features", params.perplexity, params.tol, bucket)
+        .select(
+          col("i").cast("int").as("i"),
+          col("js").cast("array<int>").as("js"),
+          col("ps"))
+        .as[AffRow]
+        .repartition(iterParts)
+        .rdd
+        // cache AND drop the SQL lineage, which would otherwise ride in
+        // every iteration's task binary (Java-serialized 87 KB vs 3.8 KB)
+        .localCheckpoint()
+      try adj.count() // materialize before the iteration loop
+      catch { case e: Throwable => adj.unpersist(); throw e }
+      (adj, n, idMap)
+    } finally indexed.unpersist()
   }
 
-  /** Driver-side parameter update: adaptive gains, momentum, recentering
-    * (reference TSNEHelper.update, TSNEHelper.scala:31-57). All state is
-    * n×d doubles — driver-local by design. */
-  def update(
-      y: Array[Double], dY: Array[Double], iY: Array[Double], gains: Array[Double],
-      iteration: Int, params: TSNEParams, n: Int, d: Int): Unit = {
-    val momentum =
-      if (iteration <= params.tMomentum) params.initialMomentum else params.finalMomentum
-    var k = 0
-    while (k < y.length) {
-      gains(k) =
-        if ((dY(k) > 0) != (iY(k) > 0)) gains(k) + 0.2
-        else gains(k) * 0.8
-      if (gains(k) < params.minGain) gains(k) = params.minGain
-      iY(k) = momentum * iY(k) - params.eta * gains(k) * dY(k)
-      y(k) += iY(k)
-      k += 1
+  /** The drivers' one skeleton: prepare the adjacency, `fit(adjacency, n)`
+    * to an n×d embedding, release the adjacency in `finally`, and return
+    * the embedding as (id, x, y, …). */
+  private[tsne] def run(
+      points: DataFrame, idCol: String, featuresCol: String, params: TSNEParams)(
+      fit: (RDD[AffRow], Int) => Array[Double]): DataFrame = {
+    val (rdd, n, idMap) = prepareAffinities(points, idCol, featuresCol, params)
+    val y = try fit(rdd, n) finally rdd.unpersist()
+    toDF(points.sparkSession, y, idMap, params.dims)
+  }
+
+  /** Momentum descent shared by SimpleTSNE and BHTSNE: P exaggerated for
+    * the first `earlyExaggeration` iterations, then the driver-side update —
+    * adaptive gains, momentum, recentering (reference TSNEHelper.update,
+    * TSNEHelper.scala:31-57). `gradient(y, iteration, exag)` returns
+    * (dY, loss). All state is n×d doubles — driver-local by design. Updates
+    * `y` in place and returns it. */
+  private[tsne] def descend(y: Array[Double], params: TSNEParams, callback: Callback)(
+      gradient: (Array[Double], Int, Double) => (Array[Double], Option[Double])): Array[Double] = {
+    val d = params.dims
+    val n = y.length / d
+    val iY = new Array[Double](y.length)
+    val gains = Array.fill(y.length)(1.0)
+    var iter = 1
+    while (iter <= params.maxIterations) {
+      val exag = if (iter <= params.earlyExaggeration) params.exaggerationFactor else 1.0
+      val (dY, loss) = gradient(y, iter, exag)
+      val momentum =
+        if (iter <= params.tMomentum) params.initialMomentum else params.finalMomentum
+      var k = 0
+      while (k < y.length) {
+        gains(k) =
+          if ((dY(k) > 0) != (iY(k) > 0)) gains(k) + 0.2
+          else gains(k) * 0.8
+        if (gains(k) < params.minGain) gains(k) = params.minGain
+        iY(k) = momentum * iY(k) - params.eta * gains(k) * dY(k)
+        y(k) += iY(k)
+        k += 1
+      }
+      // recenter each dim to zero mean
+      var dd = 0
+      while (dd < d) {
+        var s = 0.0
+        var i = 0
+        while (i < n) { s += y(i * d + dd); i += 1 }
+        val m = s / n
+        i = 0
+        while (i < n) { y(i * d + dd) -= m; i += 1 }
+        dd += 1
+      }
+      callback(iter, y.clone(), loss)
+      iter += 1
     }
-    // recenter each dim to zero mean
-    var dd = 0
-    while (dd < d) {
-      var s = 0.0
-      var i = 0
-      while (i < n) { s += y(i * d + dd); i += 1 }
-      val m = s / n
-      i = 0
-      while (i < n) { y(i * d + dd) -= m; i += 1 }
-      dd += 1
-    }
+    y
   }
 
   def gaussianInit(n: Int, d: Int, seed: Long, scale: Double): Array[Double] = {
@@ -145,72 +178,64 @@ object TSNE {
   }
 }
 
-/** Exact-gradient t-SNE (reference impl/SimpleTSNE.scala). Two Spark jobs
-  * per iteration over the cached adjacency — (1) global Student-t
-  * numerator Z, (2) gradient + KL loss accumulated into an n×d buffer via
-  * `treeAggregate` with in-place adds (the matrix-buffer aggregation
-  * SURVEY A-3/A-4; Catalyst has no matrix-valued aggregate, so the typed
-  * RDD aggregate IS the idiomatic escape hatch here). Exaggeration is a
-  * multiplier applied inside the kernel — never an in-place mutation of
-  * cached data (fixes reference hazard D-5).
+/** Exact-gradient t-SNE (reference impl/SimpleTSNE.scala): [[TSNE.descend]]
+  * over one cached adjacency RDD, released in `finally` ([[TSNE.run]]),
+  * two Spark jobs per iteration ([[SimpleTSNE.gradient]]).
   */
 object SimpleTSNE {
 
-  def tsne(
-      points: DataFrame,
-      idCol: String = "id",
-      featuresCol: String = "features",
-      params: TSNEParams = TSNEParams(),
-      callback: TSNE.Callback = TSNE.NoopCallback): DataFrame = {
-    val spark = points.sparkSession
-    val sc = spark.sparkContext
-    val (adj, n, idMap) = TSNE.prepareAffinities(points, idCol, featuresCol, params)
-    val d = params.dims
-
-    val y = TSNE.gaussianInit(n, d, params.seed, 1.0)
-    val iY = new Array[Double](n * d)
-    val gains = Array.fill(n * d)(1.0)
-
-    val rdd = adj.rdd.cache()
-    rdd.count()
-    // the Dataset cache (from prepareAffinities) fed this RDD cache and is
-    // not read again — release it so only one adjacency copy stays pinned
-    adj.unpersist()
-
-    var iter = 1
-    while (iter <= params.maxIterations) {
-      val exag = if (iter <= params.earlyExaggeration) params.exaggerationFactor else 1.0
-      val bcY = sc.broadcast(y)
-
+  /** One exact (dY, KL loss) over the adjacency: one broadcast of Y,
+    * destroyed in `finally`, and two jobs — (1) global Student-t
+    * numerator Z, (2) gradient + loss accumulated into an n×d buffer via
+    * `treeAggregate` with in-place adds (the matrix-buffer aggregation
+    * SURVEY A-3/A-4; Catalyst has no matrix-valued aggregate, so the typed
+    * RDD aggregate IS the idiomatic escape hatch here). Exaggeration is a
+    * multiplier applied inside the kernel — never an in-place mutation of
+    * cached data (fixes reference hazard D-5); `repulseScale` as in
+    * [[TSNEKernels.exactGradientRow]]. */
+  private[tsne] def gradient(
+      rdd: RDD[AffRow], y: Array[Double], n: Int, d: Int,
+      exag: Double, repulseScale: Double): (Array[Double], Double) = {
+    val bcY = rdd.sparkContext.broadcast(y)
+    try {
       // job 1: Z = Σ_{i≠j} (1 + ‖y_i − y_j‖²)⁻¹ (over row indices; O(n)/row)
       val sumZ = rdd.treeAggregate(0.0)(
         seqOp = (acc, row) => acc + TSNEKernels.rowNumeratorSum(bcY.value, n, d, row.i),
         combOp = _ + _)
-
       // job 2: (dY, loss)
-      val (dY, loss) = rdd.treeAggregate((new Array[Double](n * d), 0.0))(
+      rdd.treeAggregate((new Array[Double](n * d), 0.0))(
         seqOp = (acc, row) => {
-          val l = TSNEKernels.exactGradientRow(bcY.value, n, d, row, sumZ, exag, acc._1)
+          val l = TSNEKernels.exactGradientRow(
+            bcY.value, n, d, row, sumZ, exag, acc._1, repulseScale)
           (acc._1, acc._2 + l)
         },
         combOp = (a, b) => {
           TSNEKernels.addInPlace(a._1, b._1)
           (a._1, a._2 + b._2)
         })
-
-      bcY.destroy()
-      TSNE.update(y, dY, iY, gains, iter, params, n, d)
-      callback(iter, y.clone(), Some(loss))
-      iter += 1
-    }
-    rdd.unpersist()
-    TSNE.toDF(spark, y, idMap, d)
+    } finally bcY.destroy()
   }
+
+  def tsne(
+      points: DataFrame,
+      idCol: String = "id",
+      featuresCol: String = "features",
+      params: TSNEParams = TSNEParams(),
+      callback: TSNE.Callback = TSNE.NoopCallback): DataFrame =
+    TSNE.run(points, idCol, featuresCol, params) { (rdd, n) =>
+      val d = params.dims
+      TSNE.descend(TSNE.gaussianInit(n, d, params.seed, 1.0), params, callback) {
+        (y, _, exag) =>
+          val (dY, loss) = gradient(rdd, y, n, d, exag, repulseScale = 1.0)
+          (dY, Some(loss))
+      }
+    }
 }
 
-/** Barnes-Hut t-SNE (reference impl/BHTSNE.scala): one Spark job per
-  * iteration. The driver builds the [[FlatSPTree]] from Y (O(n log n)
-  * local) and broadcasts it once, together with a copy of Y. Each
+/** Barnes-Hut t-SNE (reference impl/BHTSNE.scala): [[TSNE.descend]] over
+  * one cached adjacency RDD, released in `finally` ([[TSNE.run]]), one
+  * Spark job per iteration. The driver builds the [[FlatSPTree]] from Y
+  * (O(n log n) local) and broadcasts it once, together with a copy of Y. Each
   * partition returns only its own rows' posF and negF plus its sumQ and
   * raw loss ([[BHTSNE.Partial]]); the driver sums sumQ and the loss in
   * partition-index order and scatters dY = posF − negF/sumQ by row index
@@ -296,36 +321,16 @@ object BHTSNE {
       idCol: String = "id",
       featuresCol: String = "features",
       params: TSNEParams = TSNEParams(maxIterations = 500),
-      callback: TSNE.Callback = TSNE.NoopCallback): DataFrame = {
-    val spark = points.sparkSession
-    val (adj, n, idMap) = TSNE.prepareAffinities(points, idCol, featuresCol, params)
-    val d = params.dims
-
-    val y = TSNE.gaussianInit(n, d, params.seed, 1e-4)
-    val iY = new Array[Double](n * d)
-    val gains = Array.fill(n * d)(1.0)
-
-    val rdd = adj.rdd.cache()
-    rdd.count()
-    // the Dataset cache (from prepareAffinities) fed this RDD cache and is
-    // not read again — release it so only one adjacency copy stays pinned
-    adj.unpersist()
-
-    var iter = 1
-    while (iter <= params.maxIterations) {
-      val exag = if (iter <= params.earlyExaggeration) params.exaggerationFactor else 1.0
-      val wantLoss = params.reportLoss > 0 && iter % params.reportLoss == 0
-      val (dY, sumQ, rawLoss) = gradient(rdd, y, n, d, params.theta, exag, wantLoss)
-
-      // KL(P‖Q) with q = num/sumQ: Σ p(log p − log num) + log(sumQ)·Σp,
-      // and Σp = exag (symmetrized P sums to 1 before exaggeration).
-      val loss = if (wantLoss) Some(rawLoss + exag * math.log(sumQ)) else None
-
-      TSNE.update(y, dY, iY, gains, iter, params, n, d)
-      callback(iter, y.clone(), loss)
-      iter += 1
+      callback: TSNE.Callback = TSNE.NoopCallback): DataFrame =
+    TSNE.run(points, idCol, featuresCol, params) { (rdd, n) =>
+      val d = params.dims
+      TSNE.descend(TSNE.gaussianInit(n, d, params.seed, 1e-4), params, callback) {
+        (y, iter, exag) =>
+          val wantLoss = params.reportLoss > 0 && iter % params.reportLoss == 0
+          val (dY, sumQ, rawLoss) = gradient(rdd, y, n, d, params.theta, exag, wantLoss)
+          // KL(P‖Q) with q = num/sumQ: Σ p(log p − log num) + log(sumQ)·Σp,
+          // and Σp = exag (symmetrized P sums to 1 before exaggeration).
+          (dY, if (wantLoss) Some(rawLoss + exag * math.log(sumQ)) else None)
+      }
     }
-    rdd.unpersist()
-    TSNE.toDF(spark, y, idMap, d)
-  }
 }

@@ -10,8 +10,9 @@ case class CalibratedNeighbor(j: Long, p: Double)
   * P(j|i), the reference's core operator (X2P.scala:14-74) re-expressed
   * as a DataFrame pipeline:
   *
-  *   kNN (i, j, dist2) → collect_list per row (sorted — see below) →
-  *   pure per-row binary-search UDF → explode back to COO.
+  *   kNN candidates (i, j, dist2) → bounded top-μ aggregate per row
+  *   (sorted — see below) → pure per-row binary-search UDF → explode
+  *   back to COO.
   *
   * The β-search (reference X2P.scala:34-70 + X2PHelper.Hbeta:17-26) is a
   * pure, driver-free scalar function: given a row's neighbor distances it
@@ -19,10 +20,10 @@ case class CalibratedNeighbor(j: Long, p: Double)
   * matches log(perplexity) within tol (≤ 50 tries, doubling/halving while
   * a bracket end is open).
   *
-  * Determinism: collect_list order is partition-dependent, and
-  * floating-point sums depend on order — so the neighbor list is
-  * `array_sort`ed on (dist2, j) before the UDF. Same input ⇒ bit-identical
-  * P on any cluster layout (SURVEY §7.4.4).
+  * Determinism: candidate arrival order is partition-dependent, and
+  * floating-point sums depend on order — so the top-μ aggregate emits each
+  * neighbor list sorted on (dist2, j) before the UDF. Same input ⇒
+  * bit-identical P on any cluster layout (SURVEY §7.4.4).
   */
 object X2P {
 
@@ -79,25 +80,12 @@ object X2P {
     (beta, p)
   }
 
-  /** knnDF: (i, j, dist2) → COO P(j|i): (i, j, p). */
-  def calibrate(
-      knnDF: DataFrame,
-      perplexity: Double = DefaultPerplexity,
-      tol: Double = DefaultTol): DataFrame =
-    calibrateGrouped(
-      knnDF
-        .groupBy(col("i"))
-        .agg(array_sort(collect_list(struct(col("dist2"), col("j")))).as("nbrs")),
-      // array_sort(struct(dist2, j)) → dist2 first field
-      distFirst = true, perplexity, tol)
-
-  /** Calibrate a pre-grouped neighborhood frame (i, nbrs ARRAY<STRUCT>).
-    * The top-k aggregate already outputs per-key sorted arrays — going
-    * back to rows just to re-collect them would pay an extra shuffle-less
-    * but allocation-heavy explode/regroup pass. */
+  /** Calibrate a pre-grouped neighborhood frame (i, nbrs ARRAY<STRUCT<j,
+    * dist2>>). The top-k aggregate already outputs per-key sorted arrays —
+    * going back to rows just to re-collect them would pay an extra
+    * shuffle-less but allocation-heavy explode/regroup pass. */
   private def calibrateGrouped(
-      grouped: DataFrame, distFirst: Boolean,
-      perplexity: Double, tol: Double): DataFrame = {
+      grouped: DataFrame, perplexity: Double, tol: Double): DataFrame = {
     val calib = udf { (nbrs: Seq[Row]) =>
       val n = nbrs.length
       val d = new Array[Double](n)
@@ -105,8 +93,8 @@ object X2P {
       var ix = 0
       while (ix < n) {
         val r = nbrs(ix)
-        if (distFirst) { d(ix) = r.getDouble(0); js(ix) = r.getLong(1) }
-        else { js(ix) = r.getLong(0); d(ix) = r.getDouble(1) }
+        js(ix) = r.getLong(0)
+        d(ix) = r.getDouble(1)
         ix += 1
       }
       val (_, p) = betaSearch(d, perplexity, tol)
@@ -115,20 +103,6 @@ object X2P {
     grouped
       .select(col("i"), explode(calib(col("nbrs"))).as("nbr"))
       .select(col("i"), col("nbr.j").as("j"), col("nbr.p").as("p"))
-  }
-
-  /** β per row (diagnostics — the reference logs mean σ, X2P.scala:72). */
-  def betas(
-      knnDF: DataFrame,
-      perplexity: Double = DefaultPerplexity,
-      tol: Double = DefaultTol): DataFrame = {
-    val betaUdf = udf { (nbrs: Seq[Row]) =>
-      betaSearch(nbrs.map(_.getDouble(0)).toArray, perplexity, tol)._1
-    }
-    knnDF
-      .groupBy(col("i"))
-      .agg(array_sort(collect_list(struct(col("dist2"), col("j")))).as("nbrs"))
-      .select(col("i"), betaUdf(col("nbrs")).as("beta"))
   }
 
   /** Full X2P: points (id, features) → P(j|i) over the μ=⌊3·perplexity⌋
@@ -144,13 +118,11 @@ object X2P {
       featuresCol: String = "features",
       perplexity: Double = DefaultPerplexity,
       tol: Double = DefaultTol,
-      approxBucketLength: Option[Double] = None,
-      approxTables: Int = 8,
-      approxHashesPerTable: Int = 2): DataFrame = {
+      approxBucketLength: Option[Double] = None): DataFrame = {
     val mu = math.floor(3 * perplexity).toInt
     // consume the top-k aggregate's grouped output directly: its nbrs
     // arrays are already sorted ascending by (dist2, j)
-    // approx default is COMPOUND buckets (8 tables × 2 projections): the
+    // approx candidates use COMPOUND buckets (8 tables × 2 projections): the
     // t-SNE affinity path is a large-n path by construction, where single
     // projections concentrate mass in hot center buckets and one
     // straggler task dominates (ProfileSpec end-to-end BH @16k: 24.8 s
@@ -159,10 +131,10 @@ object X2P {
       case Some(w) =>
         KNN.topKGrouped(
           KNN.approxCandidates(points, idCol, featuresCol, w,
-            approxTables, approxHashesPerTable), mu)
+            numHashTables = 8, hashesPerTable = 2), mu)
       case None =>
         KNN.topKGrouped(KNN.pairwise(KNN.prepare(points, idCol, featuresCol)), mu)
     }
-    calibrateGrouped(grouped, distFirst = false, perplexity, tol)
+    calibrateGrouped(grouped, perplexity, tol)
   }
 }
