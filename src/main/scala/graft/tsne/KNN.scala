@@ -1,31 +1,32 @@
 package graft.tsne
 
 import graft.functions.VectorFunctions._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{TopKBuffer, VectorExprs}
 
 /** Exact k-nearest-neighbors over an (id, features ARRAY<numeric>) frame.
   *
-  * Reference semantics (X2P.scala:23-32): all-pairs candidate generation
+  * Reference semantics (X2P.scala:23-32): all-pairs candidates
   * (`cartesian`) followed by per-key top-k (`topByKey`, a bounded priority
-  * queue with map-side partial aggregation). Exact kNN is O(n²) by design
-  * — it is the reference's semantics and our correctness oracle; the
-  * approximate scale path lives in [[graft.ops.SimilaritySearch]].
+  * queue). Exact kNN is O(n²) work by design; the approximate scale path
+  * is [[knnApprox]] (and [[graft.ops.SimilaritySearch]]).
   *
-  * Two physical strategies for the same logical result:
+  * Two physical routes to the same result, both ordered by (dist², j), an
+  * explicit deterministic tie-break the reference leaves to
+  * priority-queue order (SURVEY §7.4.4):
   *
-  *  - [[knnWindow]]: crossJoin → ranking window. Simple and declarative,
-  *    but `Window.partitionBy(i)` shuffles all n² candidate rows.
-  *  - [[knn]] (default): crossJoin → groupBy(i) with a bounded-heap
-  *    native `TopKNeighbors` TypedImperativeAggregate. Spark plans it as an
-  *    ObjectHashAggregate with a partial phase, so each map task emits at
-  *    most k neighbors per key and the shuffle carries O(n·k), not O(n²)
-  *    — the same trick as the reference's `topByKey`. At 1000 executors
-  *    this is the difference between shuffling terabytes and gigabytes.
-  *
-  * Both order by (dist², j) — an explicit deterministic tie-break the
-  * reference leaves to priority-queue order (SURVEY §7.4.4).
+  *  - [[knn]] (default): the points are collected once and broadcast once
+  *    ([[Points]]); tasks over index slices of `spark.range` each fill a
+  *    bounded `TopKBuffer` per row of their slice against the broadcast
+  *    ([[exactTopK]]). No n²-row intermediate, no join, no shuffle — the
+  *    small-side broadcast with per-partition top-k of distributed top-k
+  *    similarity joins. The points must fit on the driver, as t-SNE's
+  *    positional Y and idMap already do.
+  *  - [[knnWindow]]: crossJoin → ranking window. Declarative and
+  *    shuffles all n² candidate rows; kept as the test oracle.
   */
 object KNN {
 
@@ -34,6 +35,74 @@ object KNN {
     df.select(
       col(idCol).cast("long").as("id"),
       asDoubleArray(col(featuresCol)).as("features"))
+
+  /** Points on the driver in ascending id order: `ids(r)` and its
+    * features `rows(r)`, null where the features are null. */
+  private[tsne] final case class Points(ids: Array[Long], rows: Array[Array[Double]])
+
+  private[tsne] object Points {
+    /** Rows of [[prepare]]'s (id, features), non-null ids, → [[Points]]. */
+    def of(collected: Array[Row]): Points = {
+      val sorted = collected.sortBy(_.getLong(0))
+      Points(sorted.map(_.getLong(0)),
+        sorted.map(r => if (r.isNullAt(1)) null else r.getSeq[Double](1).toArray))
+    }
+
+    /** The non-null-id points of `df`, collected once. */
+    def collect(df: DataFrame, idCol: String, featuresCol: String): Points =
+      of(prepare(df, idCol, featuresCol).where(col("id").isNotNull).collect())
+  }
+
+  /** ‖x − y‖² in `array_sq_dist`'s order — one sequential `s += d·d` —
+    * and with its ragged-length error. */
+  private def sqDist(x: Array[Double], y: Array[Double]): Double = {
+    val m = VectorExprs.requireSameLength(x.length, y.length, "array_sq_dist")
+    var s = 0.0
+    var c = 0
+    while (c < m) {
+      val d = x(c) - y(c)
+      s += d * d
+      c += 1
+    }
+    s
+  }
+
+  /** The exact top-k kernel: every id's k nearest points of other ids,
+    * sorted by (dist², j), handed to `emit` as a filled `TopKBuffer`. Tasks
+    * run over index slices of `spark.range` against the broadcast points;
+    * rows sharing an id form one list, as a `groupBy(i)` would. A row with
+    * null features has no candidates and is no one's candidate, and an id
+    * without candidates emits nothing. The broadcast is read whenever the
+    * result runs, so the caller owns it. */
+  private[tsne] def exactTopK[T: Encoder](spark: SparkSession, points: Broadcast[Points], k: Int)(
+      emit: (Long, TopKBuffer) => Iterator[T]): Dataset[T] = {
+    val n = points.value.ids.length
+    spark.range(0, n, 1, spark.sparkContext.defaultParallelism).mapPartitions { slice =>
+      val Points(ids, rows) = points.value
+      slice.flatMap { r0 =>
+        val r = r0.intValue
+        // a later row of a shared id: its list belongs to the first row
+        if (r > 0 && ids(r) == ids(r - 1)) Iterator.empty
+        else {
+          val id = ids(r)
+          val buf = new TopKBuffer(k)
+          var q = r
+          while (q < n && ids(q) == id) {
+            val x = rows(q)
+            if (x != null) {
+              var j = 0
+              while (j < n) {
+                if (ids(j) != id && rows(j) != null) buf.insert(ids(j), sqDist(x, rows(j)))
+                j += 1
+              }
+            }
+            q += 1
+          }
+          if (buf.n == 0) Iterator.empty else emit(id, buf)
+        }
+      }
+    }
+  }
 
   /** All ordered pairs (i, j, dist2), i ≠ j. The streamed (left) side is
     * spread to the session's parallelism first — a single-split input
@@ -47,7 +116,8 @@ object KNN {
       .select(col("i"), col("j"), arraySqDist(col("fa"), col("fb")).as("dist2"))
   }
 
-  /** Window-based top-k (shuffles all candidates; oracle-matching shape). */
+  /** Window-based top-k over all pairs: the oracle [[knn]] is tested
+    * against (shuffles all n² candidates). */
   def knnWindow(df: DataFrame, idCol: String, featuresCol: String, k: Int): DataFrame = {
     val w = Window.partitionBy(col("i")).orderBy(col("dist2").asc, col("j").asc)
     pairwise(prepare(df, idCol, featuresCol))
@@ -55,10 +125,17 @@ object KNN {
       .where(col("rank") <= k)
   }
 
-  /** Bounded-heap top-k via the native partial-aggregating
-    * TypedImperativeAggregate (default). */
-  def knn(df: DataFrame, idCol: String, featuresCol: String, k: Int): DataFrame =
-    topKFromCandidates(pairwise(prepare(df, idCol, featuresCol)), k)
+  /** Exact kNN: (i, j, dist2, rank) from one collect, one broadcast and
+    * [[exactTopK]]. The broadcast lives as long as the returned frame
+    * (Spark's ContextCleaner drops it once the frame is unreachable). */
+  def knn(df: DataFrame, idCol: String, featuresCol: String, k: Int): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val points = spark.sparkContext.broadcast(Points.collect(df, idCol, featuresCol))
+    exactTopK(spark, points, k) { (i, buf) =>
+      Iterator.tabulate(buf.n)(r => (i, buf.js(r), buf.ds(r), r + 1))
+    }.toDF("i", "j", "dist2", "rank")
+  }
 
   /** Approximate kNN — the 100 TB candidate-generation path (SURVEY
     * §7.4.1): Euclidean p-stable LSH (`BucketedRandomProjectionLSH`, the

@@ -16,19 +16,17 @@ object TSNE {
   /** Prepare (id, features) into dense 0..n-1 indices + the one cached
     * adjacency RDD the iterations run over: (adjacency, n, idMap). The
     * caller owns the returned cache and unpersists it (`run` does, in
-    * `finally`); the intermediate indexed-points cache is released here,
-    * in `finally`.
+    * `finally`).
     *
     * Dense indices are required because the embedding Y is a driver-side
     * flat matrix indexed positionally (SURVEY §1.4). The reference gets
     * them implicitly from `zipWithIndex` partition order — the
-    * nondeterminism hazard flagged in SURVEY §4.3.2; here the mapping is
-    * orig_id rank order, realized as a broadcast-joined driver-built
-    * lookup: the sorted idMap must be collected anyway (Y is a positional
-    * driver matrix, so n is bounded), and joining it back beats a global
-    * `row_number()` window, which would funnel every (id, features) row —
-    * feature arrays included — through one partition. Only the 8-byte
-    * orig_id column is ever collected (column-pruned scan).
+    * nondeterminism hazard flagged in SURVEY §4.3.2; here the index is the
+    * orig_id rank. (orig_id, features) is collected once and sorted by
+    * orig_id: that order is both idMap and the point matrix, row i = rank
+    * i (Y already bounds n by the driver). The exact path broadcasts that
+    * matrix once for [[X2P.exact]] and destroys it in `finally`; the
+    * opt-in LSH path builds its dense-id input frame from the same arrays.
     */
   def prepareAffinities(
       points: DataFrame,
@@ -38,17 +36,14 @@ object TSNE {
     val spark = points.sparkSession
     import spark.implicits._
 
-    val base = points
-      .select(col(idCol).cast("long").as("orig_id"),
-        graft.functions.VectorFunctions.asDoubleArray(col(featuresCol)).as("features"))
-    val idRows = base.select("orig_id").collect()
-    val idMap = idRows.map { r =>
+    val rows = KNN.prepare(points, idCol, featuresCol).collect()
+    rows.foreach { r =>
       require(!r.isNullAt(0),
         s"t-SNE id column '$idCol' contains null or non-numeric values " +
           "(cast to LONG produced null) — ids must be non-null and castable")
-      r.getLong(0)
     }
-    java.util.Arrays.sort(idMap)
+    val sorted = KNN.Points.of(rows)
+    val idMap = sorted.ids
     val n = idMap.length
     var w = 1
     while (w < n) {
@@ -57,23 +52,23 @@ object TSNE {
           "ids must be unique (dense indices are derived from id rank)")
       w += 1
     }
-    val mapDf = spark.createDataset(
-        idMap.toSeq.zipWithIndex.map { case (o, i) => (o, i.toLong) })
-      .toDF("orig_id", "id")
-    val indexed = base.join(broadcast(mapDf), "orig_id").cache()
+    val dense = KNN.Points(Array.tabulate(n)(_.toLong), sorted.rows)
+    // right-size iteration partitions: each per-iteration job pays a task
+    // per partition, and adjacency rows are tiny (~k neighbors each) —
+    // target ≥256 rows/task instead of inheriting shuffle.partitions
+    val iterParts = math.max(1, math.min(
+      spark.sparkContext.defaultParallelism, n / 256))
+    val bc = if (params.approxKnn) None else Some(spark.sparkContext.broadcast(dense))
     try {
-      // right-size iteration partitions: each per-iteration job pays a task
-      // per partition, and adjacency rows are tiny (~k neighbors each) —
-      // target ≥256 rows/task instead of inheriting shuffle.partitions
-      val iterParts = math.max(1, math.min(
-        spark.sparkContext.defaultParallelism, n / 256))
-      val bucket =
-        if (params.approxKnn)
-          Some(params.approxKnnBucketLength.getOrElse(
-            KNN.autoBucketLength(indexed, "features")))
-        else None
-      val adj = Affinities.computeP(
-          indexed, n.toLong, "id", "features", params.perplexity, params.tol, bucket)
+      val pji = bc match {
+        case Some(b) => X2P.exact(spark, b, params.perplexity, params.tol)
+        case None =>
+          val frame = dense.ids.zip(dense.rows).toSeq.toDF("id", "features")
+          val bucket = params.approxKnnBucketLength.getOrElse(
+            KNN.autoBucketLength(frame, "features"))
+          X2P.x2p(frame, "id", "features", params.perplexity, params.tol, Some(bucket))
+      }
+      val adj = Affinities.adjacency(Affinities.symmetrize(pji, n.toLong))
         .select(
           col("i").cast("int").as("i"),
           col("js").cast("array<int>").as("js"),
@@ -87,7 +82,7 @@ object TSNE {
       try adj.count() // materialize before the iteration loop
       catch { case e: Throwable => adj.unpersist(); throw e }
       (adj, n, idMap)
-    } finally indexed.unpersist()
+    } finally bc.foreach(_.destroy())
   }
 
   /** The drivers' one skeleton: prepare the adjacency, `fit(adjacency, n)`

@@ -38,17 +38,25 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("partial_sum"), p)
   }
 
-  test("knn: native sq-dist expression + partial top-k aggregation") {
+  test("knn: exact top-k maps range slices over one broadcast, no cartesian or exchange") {
     val p = plan("knn_embeddings")
-    // the custom expression is planned natively (not a ScalaUDF wrapper)
-    assert(p.contains("array_sq_dist"), p)
-    assert(!p.contains("UDF(")) // no black-box UDF on the pair hot path
-    // bounded-heap top-k must keep its partial phase (map-side pruning)
-    assert(p.contains("partial_topk_neighbors"), p)
+    assert(p.contains("Range ("), p)
+    assert(p.contains("MapPartitions"), p)
+    for (op <- Seq("CartesianProduct", "BroadcastNestedLoopJoin", "Exchange", "topk_neighbors"))
+      assert(!p.contains(op), s"$op in\n$p")
   }
 
-  test("knn: sq-dist participates in whole-stage codegen at runtime") {
-    val df = SparkEntry.queries("knn_embeddings")(spark, dir)
+  test("x2p: exact calibration is the same range map, with no join, exchange or explode") {
+    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    val p = tsne.X2P.x2p(emb, "vec_id", "embedding").queryExecution.executedPlan.toString
+    assert(p.contains("Range ("), p)
+    for (op <- Seq("Join", "CartesianProduct", "Exchange", "Generate"))
+      assert(!p.contains(op), s"$op in\n$p")
+  }
+
+  test("knn oracle: sq-dist participates in whole-stage codegen at runtime") {
+    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    val df = tsne.KNN.knnWindow(emb, "vec_id", "embedding", 10)
     df.collect() // force execution so AQE finalizes stages
     val executed = df.queryExecution.executedPlan.toString
     // '*(n)' prefixes mark whole-stage-codegen stages; the sq-dist

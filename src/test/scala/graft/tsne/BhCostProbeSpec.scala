@@ -7,10 +7,23 @@ import org.scalatest.funsuite.AnyFunSuite
   * into its parts — driver tree build, the one broadcast of (Y, tree),
   * the job floor (same job shape, empty kernel), the job with the real
   * row-local kernel, and the whole `BHTSNE.gradient` — at 2k points,
-  * where the job floor dominates, and at 16k, where the kernel does. */
+  * where the job floor dominates, and at 16k, where the kernel does.
+  *
+  * Each part is first called until its timings are steady (at least
+  * `minWarm` calls, then until the median of the last 20 calls is within
+  * 5% of the 20 before), so the JIT has finished compiling it. The parts
+  * are then timed in interleaved rounds, one call of each per round, and
+  * the differences (kernel = job − floor, driver = whole − job) are the
+  * medians of the per-round differences, so a slow stretch of the machine
+  * moves both sides of a subtraction alike. */
 class BhCostProbeSpec extends AnyFunSuite {
 
-  private def probe(n: Int): Unit = {
+  private def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    s(s.length / 2)
+  }
+
+  private def probe(n: Int, minWarm: Int, rounds: Int): Unit = {
     assume(sys.env.get("GRAFT_PROFILE").contains("1"), "opt-in probe")
     val sc = TestSpark.spark.sparkContext
     val d = 2
@@ -25,46 +38,61 @@ class BhCostProbeSpec extends AnyFunSuite {
     val parts = math.max(1, math.min(sc.defaultParallelism, n / 256))
     val rdd = sc.parallelize(rows, parts).cache()
     rdd.count()
-
-    def time[A](label: String, reps: Int)(f: => A): Double = {
-      f // warm
-      val ms = (1 to reps).map { _ =>
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e6
-      }.sorted
-      val p50 = ms(reps / 2)
-      println(f"[probe] n=$n%-6d $label%-34s $p50%8.2f ms (median of $reps)")
-      p50
-    }
-
-    time("SPTree.build", 20)(SPTree.build(y, n, d))
-    val flat = time("FlatSPTree.build", 20)(FlatSPTree.build(y, n, d))
     val tree = FlatSPTree.build(y, n, d)
     val ser = new org.apache.spark.serializer.KryoSerializer(sc.getConf).newInstance()
-    time("kryo serialize pointer tree", 20)(ser.serialize(SPTree.build(y, n, d)))
-    time("kryo serialize (Y, flat tree)", 20)(ser.serialize((y, tree)))
-    val bcast = time("broadcast (Y, tree) + destroy", 20) {
-      val b = sc.broadcast((y.clone(), tree)); b.destroy()
-    }
     val bc = sc.broadcast((y.clone(), tree))
-    val floor = time(s"runJob, empty kernel ($parts tasks)", 30) {
-      sc.runJob(rdd, (it: Iterator[AffRow]) => { bc.value; it.size })
-    }
-    val job = time(s"runJob, row-local forces", 30) {
-      sc.runJob(rdd, (it: Iterator[AffRow]) => {
+
+    val floor = s"runJob, empty kernel ($parts tasks)"
+    val job = "runJob, row-local forces"
+    val whole = "BHTSNE.gradient (whole iteration)"
+    val probes: Seq[(String, () => Any)] = Seq(
+      "SPTree.build" -> (() => SPTree.build(y, n, d)),
+      "FlatSPTree.build" -> (() => FlatSPTree.build(y, n, d)),
+      "kryo serialize pointer tree" -> (() => ser.serialize(SPTree.build(y, n, d))),
+      "kryo serialize (Y, flat tree)" -> (() => ser.serialize((y, tree))),
+      "broadcast (Y, tree) + destroy" -> { () =>
+        val b = sc.broadcast((y.clone(), tree)); b.destroy()
+      },
+      floor -> (() => sc.runJob(rdd, (it: Iterator[AffRow]) => { bc.value; it.size })),
+      job -> (() => sc.runJob(rdd, (it: Iterator[AffRow]) => {
         val (yb, t) = bc.value
         BHTSNE.partial(it, yb, t, d, 0.5, 1.0, wantLoss = false)
-      })
+      })),
+      whole -> (() => BHTSNE.gradient(rdd, y, n, d, 0.5, 1.0, wantLoss = false)))
+
+    def once(f: () => Any): Double = {
+      val t0 = System.nanoTime(); f(); (System.nanoTime() - t0) / 1e6
     }
+
+    for ((label, f) <- probes) {
+      val ms = scala.collection.mutable.ArrayBuffer[Double]()
+      def steady: Boolean = ms.length >= minWarm && {
+        val last = median(ms.takeRight(20).toSeq)
+        val prev = median(ms.slice(ms.length - 40, ms.length - 20).toSeq)
+        math.abs(last - prev) <= 0.05 * prev
+      }
+      while (!steady && ms.length < 10 * minWarm) ms += once(f)
+      println(f"[probe] n=$n%-6d warmed $label%-34s ${ms.length}%5d calls, " +
+        f"last 20 median ${median(ms.takeRight(20).toSeq)}%8.2f ms")
+    }
+
+    val times = Array.fill(probes.length, rounds)(0.0)
+    for (r <- 0 until rounds; (p, ix) <- probes.zipWithIndex) times(ix)(r) = once(p._2)
+    val byLabel = probes.map(_._1).zip(times.toSeq).toMap
+    for ((label, _) <- probes)
+      println(f"[probe] n=$n%-6d $label%-34s ${median(byLabel(label).toSeq)}%8.2f ms " +
+        s"(median of $rounds interleaved rounds)")
+    def diff(a: String, b: String): Double =
+      median(byLabel(a).indices.map(r => byLabel(a)(r) - byLabel(b)(r)))
+    println(f"[probe] n=$n%-6d kernel ~ job - floor ${diff(job, floor)}%.2f ms; " +
+      f"driver (build + broadcast + combine) ~ whole - job ${diff(whole, job)}%.2f ms " +
+      f"(build ${median(byLabel("FlatSPTree.build").toSeq)}%.2f, " +
+      f"broadcast ${median(byLabel("broadcast (Y, tree) + destroy").toSeq)}%.2f)")
     bc.destroy()
-    val whole = time("BHTSNE.gradient (whole iteration)", 30)(
-      BHTSNE.gradient(rdd, y, n, d, 0.5, 1.0, wantLoss = false))
-    println(f"[probe] n=$n%-6d kernel ~ job - floor ${job - floor}%.2f ms; " +
-      f"driver (build + broadcast + combine) ~ ${whole - job}%.2f ms " +
-      f"(build $flat%.2f, broadcast $bcast%.2f)")
     rdd.unpersist()
   }
 
-  test("BH per-iteration cost decomposition at 2k")(probe(2000))
+  test("BH per-iteration cost decomposition at 2k")(probe(2000, minWarm = 200, rounds = 60))
 
-  test("BH per-iteration cost decomposition at 16k")(probe(16000))
+  test("BH per-iteration cost decomposition at 16k")(probe(16000, minWarm = 60, rounds = 30))
 }

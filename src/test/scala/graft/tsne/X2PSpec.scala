@@ -3,6 +3,11 @@ package graft.tsne
 import graft.TestSpark
 import org.scalatest.funsuite.AnyFunSuite
 
+/** The 500-point sf0.01 embeddings fixture, the one the t-SNE goldens use. */
+private object Sf001 {
+  def embeddings = TestSpark.spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+}
+
 class HbetaSpec extends AnyFunSuite {
 
   private val rng = new scala.util.Random(42)
@@ -99,6 +104,26 @@ class X2PSpec extends AnyFunSuite {
     val total = sym.values.sum
     assert(math.abs(total - 1.0) < 1e-3, s"sum(P)=$total")
   }
+
+  test("exact P is bit-equal to betaSearch over the window oracle's top-μ lists") {
+    val emb = Sf001.embeddings
+    val perplexity = 20.0
+    val mu = 60
+    val got = X2P.x2p(emb, "vec_id", "embedding", perplexity = perplexity)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val lists = KNN.knnWindow(emb, "vec_id", "embedding", mu).collect()
+      .groupBy(_.getLong(0))
+      .map { case (i, rs) => i -> rs.sortBy(_.getInt(3)) }
+    val want = lists.flatMap { case (i, rs) =>
+      val (_, p) = X2P.betaSearch(rs.map(_.getDouble(2)), perplexity, X2P.DefaultTol)
+      rs.indices.map(r => (i, rs(r).getLong(1)) -> p(r))
+    }
+    assert(got.size == 500 * mu)
+    assert(got.keySet == want.keySet)
+    val differ = got.count { case (ij, p) =>
+      java.lang.Double.doubleToRawLongBits(p) != java.lang.Double.doubleToRawLongBits(want(ij)) }
+    assert(differ == 0, s"$differ of ${got.size} P(j|i) differ from the oracle's")
+  }
 }
 
 class KNNSpec extends AnyFunSuite {
@@ -151,5 +176,73 @@ class KNNSpec extends AnyFunSuite {
       .select("i", "j", "rank").collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(viaAgg == viaWin)
     assert(viaAgg.size == 100 * 5)
+  }
+
+  private def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+
+  /** (i, rank) → (j, dist2 bits) of a kNN frame. */
+  private def lists(df: org.apache.spark.sql.DataFrame): Map[(Long, Int), (Long, Long)] =
+    df.select("i", "j", "dist2", "rank").collect()
+      .map(r => (r.getLong(0), r.getInt(3)) -> (r.getLong(1), bits(r.getDouble(2)))).toMap
+
+  test("knn equals the window oracle on the sf0.01 embeddings, dist2 bit for bit") {
+    val emb = Sf001.embeddings
+    val got = lists(KNN.knn(emb, "vec_id", "embedding", 10))
+    assert(got.size == 500 * 10)
+    assert(got == lists(KNN.knnWindow(emb, "vec_id", "embedding", 10)))
+  }
+
+  test("knn equals the window oracle on a mixture with exact duplicate points (ties by j)") {
+    import spark.implicits._
+    val rng = new java.util.Random(11)
+    val centres = Array.fill(4, 6)(rng.nextGaussian() * 3.0)
+    val base = (0 until 90).map(i => centres(i % 4).map(_ + rng.nextGaussian()))
+    // every third point is repeated exactly under a fresh id
+    val pts = base ++ base.indices.filter(_ % 3 == 0).map(base)
+    val df = pts.zipWithIndex.map { case (x, i) => (i.toLong * 7 % 1000, x) }
+      .toDF("vec_id", "embedding")
+    val got = lists(KNN.knn(df, "vec_id", "embedding", 7))
+    assert(got.size == pts.size * 7)
+    assert(got.values.exists(_._2 == bits(0.0)), "the mixture has no tied pair")
+    assert(got == lists(KNN.knnWindow(df, "vec_id", "embedding", 7)))
+  }
+
+  test("knn: a point with null features has no row and is no one's neighbour") {
+    import spark.implicits._
+    val df = Seq[(Long, Array[Double])](
+      (0L, Array(0.0)), (1L, Array(1.0)), (2L, null), (3L, Array(3.0)))
+      .toDF("id", "features")
+    val out = KNN.knn(df, "id", "features", 5).collect()
+    assert(out.length == 3 * 2)
+    assert(!out.exists(r => r.getLong(0) == 2L || r.getLong(1) == 2L))
+  }
+
+  test("knn: rows sharing an id form one neighbour list, as the grouped aggregate did") {
+    import spark.implicits._
+    val df = Seq(
+      (0L, Array(0.0, 0.0)), (1L, Array(1.0, 0.0)), (1L, Array(1.5, 0.5)),
+      (2L, Array(4.0, 4.0)), (3L, Array(0.0, 2.0))).toDF("id", "features")
+    val grouped = KNN.topKFromCandidates(
+      KNN.pairwise(KNN.prepare(df, "id", "features")), 3)
+    assert(lists(KNN.knn(df, "id", "features", 3)) == lists(grouped))
+  }
+
+  test("knn: ragged feature arrays raise array_sq_dist's error") {
+    import spark.implicits._
+    val df = Seq((0L, Array(1.0, 2.0)), (1L, Array(1.0, 2.0, 3.0))).toDF("id", "features")
+    def error(run: => Any): String = {
+      val e = intercept[Exception](run)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case a: IllegalArgumentException => a.getMessage }
+        .getOrElse(fail(s"no IllegalArgumentException in the causes of $e"))
+    }
+    val lengths = "array_sq_dist requires equal-length arrays, got (\\d) and (\\d)".r
+    def pair(msg: String): Set[String] = msg match {
+      case lengths(a, b) => Set(a, b)
+      case other => fail(s"unexpected message: $other")
+    }
+    val got = error(KNN.knn(df, "id", "features", 1).collect())
+    val oracle = error(KNN.knnWindow(df, "id", "features", 1).collect())
+    assert(pair(got) == Set("2", "3") && pair(oracle) == Set("2", "3"), s"$got / $oracle")
   }
 }
