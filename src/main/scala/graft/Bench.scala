@@ -24,8 +24,8 @@ object Bench {
     val warmDir =
       if (new java.io.File("/root/testdata/sf0.001").isDirectory) "/root/testdata/sf0.001"
       else sfDir
-    // the BH family warms at sf0.01, not sf0.001: its hot loops (SPTree
-    // walk, edge-force kernels) need ~500 points × 30 iterations of
+    // the BH family warms at sf0.01, not sf0.001: its hot loops (tree
+    // build and walk, edge-force kernels) need ~500 points × 30 iterations of
     // invocations before C2 JIT kicks in — a 50-point warmup left the
     // driver's single timed run 1.4× over the pinned steady state (r2)
     val warmDir2 =

@@ -229,8 +229,8 @@ object SimpleTSNE {
 
 /** Barnes-Hut t-SNE (reference impl/BHTSNE.scala): [[TSNE.descend]] over
   * one cached adjacency RDD, released in `finally` ([[TSNE.run]]), one
-  * Spark job per iteration. The driver builds the [[FlatSPTree]] from Y
-  * (O(n log n) local) and broadcasts it once, together with a copy of Y. Each
+  * Spark job per iteration. The driver builds the [[FlatSPTree]] from Y in
+  * one pass (O(n log n) local) and broadcasts it once, with a copy of Y. Each
   * partition returns only its own rows' posF and negF plus its sumQ and
   * raw loss ([[BHTSNE.Partial]]); the driver sums sumQ and the loss in
   * partition-index order and scatters dY = posF − negF/sumQ by row index
@@ -282,8 +282,8 @@ object BHTSNE {
       rdd: RDD[AffRow], y: Array[Double], n: Int, d: Int,
       theta: Double, exag: Double, wantLoss: Boolean): (Array[Double], Double, Double) = {
     val sc = rdd.sparkContext
-    // the struct-of-arrays tree: serializing the pointer tree dominated
-    // the iteration (~140 ms vs ~20 ms build at n=16k)
+    // the struct-of-arrays tree: serializing a pointer tree dominated the
+    // iteration (~140 ms vs ~20 ms build at n=16k)
     val bc = sc.broadcast((y.clone(), FlatSPTree.build(y, n, d)))
     val parts =
       try sc.runJob(rdd, (it: Iterator[AffRow]) => {

@@ -4,7 +4,8 @@ import graft.TestSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Opt-in probe (GRAFT_PROFILE=1): decompose the BH per-iteration cost
-  * into its parts — driver tree build, the one broadcast of (Y, tree),
+  * into its parts — driver tree build (with the pointer reference
+  * [[SPTree]]'s build as a yardstick), the one broadcast of (Y, tree),
   * the job floor (same job shape, empty kernel), the job with the real
   * row-local kernel, and the whole `BHTSNE.gradient` — at 2k points,
   * where the job floor dominates, and at 16k, where the kernel does.
@@ -48,7 +49,6 @@ class BhCostProbeSpec extends AnyFunSuite {
     val probes: Seq[(String, () => Any)] = Seq(
       "SPTree.build" -> (() => SPTree.build(y, n, d)),
       "FlatSPTree.build" -> (() => FlatSPTree.build(y, n, d)),
-      "kryo serialize pointer tree" -> (() => ser.serialize(SPTree.build(y, n, d))),
       "kryo serialize (Y, flat tree)" -> (() => ser.serialize((y, tree))),
       "broadcast (Y, tree) + destroy" -> { () =>
         val b = sc.broadcast((y.clone(), tree)); b.destroy()

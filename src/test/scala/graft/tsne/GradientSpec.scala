@@ -92,18 +92,23 @@ class GradientSpec extends AnyFunSuite {
     val dYexact = new Array[Double](n * d)
     rows.foreach(r => TSNEKernels.exactGradientRow(y, n, d, r, z, 1.0, dYexact))
 
-    val tree = SPTree.build(y, n, d)
-    val posF = new Array[Double](n * d)
-    val negF = new Array[Double](n * d)
-    var sumQ = 0.0
-    rows.foreach { r =>
-      sumQ += tree.nonEdgeForces(TSNEKernels.rowOf(y, d, r.i), 0.0, negF, r.i * d)
-      TSNEKernels.edgeForcesRow(y, d, r, 1.0, posF, r.i * d, wantLoss = false)
-    }
-    for (k <- 0 until n * d) {
-      val bh = 4.0 * (posF(k) - negF(k) / sumQ)
-      assert(math.abs(bh - dYexact(k)) < 1e-6 * math.max(1.0, math.abs(dYexact(k))),
-        s"coord $k: BH $bh vs exact ${dYexact(k)}")
+    // the reference pointer tree and the production flat tree
+    val trees: Seq[(String, (Array[Double], Double, Array[Double], Int) => Double)] =
+      Seq("SPTree" -> SPTree.build(y, n, d).nonEdgeForces,
+        "FlatSPTree" -> FlatSPTree.build(y, n, d).nonEdgeForces)
+    for ((name, nonEdgeForces) <- trees) {
+      val posF = new Array[Double](n * d)
+      val negF = new Array[Double](n * d)
+      var sumQ = 0.0
+      rows.foreach { r =>
+        sumQ += nonEdgeForces(TSNEKernels.rowOf(y, d, r.i), 0.0, negF, r.i * d)
+        TSNEKernels.edgeForcesRow(y, d, r, 1.0, posF, r.i * d, wantLoss = false)
+      }
+      for (k <- 0 until n * d) {
+        val bh = 4.0 * (posF(k) - negF(k) / sumQ)
+        assert(math.abs(bh - dYexact(k)) < 1e-6 * math.max(1.0, math.abs(dYexact(k))),
+          s"$name coord $k: BH $bh vs exact ${dYexact(k)}")
+      }
     }
   }
 }

@@ -1,11 +1,10 @@
 package graft.tsne
 
-/** Barnes-Hut space-partitioning tree (quad/oct tree for d dims).
-  *
-  * Driver-local structure built per iteration from the n×d embedding and
-  * broadcast to executors (reference SPTree.scala, BHTSNE.scala:51-52) —
-  * Y is tiny (n×2 doubles) so a driver build + broadcast is the right
-  * distribution boundary even at n = 10⁶ (SURVEY §1.4).
+/** Barnes-Hut space-partitioning tree (quad/oct tree for d dims) as a
+  * pointer tree of node objects: the test reference for the production
+  * [[FlatSPTree]]. SPTreeSpec checks its invariants; FlatSPTreeSpec,
+  * GradientSpec and BhCostProbeSpec compare the flat tree against it
+  * (same node count, bit-identical forces).
   *
   * Conventions preserved from the reference (SPTree.scala:54-55,
   * SPTreeSpec.scala:27-32): a point exactly on a split midpoint goes to

@@ -72,15 +72,22 @@ class SPTreeSpec extends AnyFunSuite {
     verify(t)
   }
 
+  /** nonEdgeForces of the reference tree and of the production flat tree. */
+  private def forces(y: Array[Double], n: Int, d: Int)
+      : Seq[(String, (Array[Double], Double, Array[Double], Int) => Double)] = {
+    val tree = SPTree.build(y, n, d)
+    val flat = FlatSPTree.build(y, n, d)
+    Seq("SPTree" -> tree.nonEdgeForces, "FlatSPTree" -> flat.nonEdgeForces)
+  }
+
   test("nonEdgeForces with theta=0 equals brute-force repulsion") {
     val n = 50
     val d = 2
     val y = randomY(n, d)
-    val tree = SPTree.build(y, n, d)
-    for (i <- 0 until n) {
+    for ((name, nonEdgeForces) <- forces(y, n, d); i <- 0 until n) {
       val yi = TSNEKernels.rowOf(y, d, i)
       val negF = new Array[Double](n * d)
-      val sumQ = tree.nonEdgeForces(yi, 0.0, negF, i * d)
+      val sumQ = nonEdgeForces(yi, 0.0, negF, i * d)
 
       var bfSumQ = 0.0
       val bfNeg = new Array[Double](d)
@@ -91,9 +98,9 @@ class SPTreeSpec extends AnyFunSuite {
         bfSumQ += q
         for (k <- 0 until d) bfNeg(k) += q * q * (yi(k) - y(j * d + k))
       }
-      assert(math.abs(sumQ - bfSumQ) < 1e-9, s"sumQ row $i")
+      assert(math.abs(sumQ - bfSumQ) < 1e-9, s"$name sumQ row $i")
       for (k <- 0 until d)
-        assert(math.abs(negF(i * d + k) - bfNeg(k)) < 1e-9, s"negF row $i dim $k")
+        assert(math.abs(negF(i * d + k) - bfNeg(k)) < 1e-9, s"$name negF row $i dim $k")
     }
   }
 
@@ -101,20 +108,19 @@ class SPTreeSpec extends AnyFunSuite {
     val n = 300
     val d = 2
     val y = randomY(n, d)
-    val tree = SPTree.build(y, n, d)
-    var approxQ = 0.0
     var exactQ = 0.0
-    val negF = new Array[Double](n * d)
-    for (i <- 0 until n) {
-      val yi = TSNEKernels.rowOf(y, d, i)
-      approxQ += tree.nonEdgeForces(yi, 0.5, negF, i * d)
-      for (j <- 0 until n if j != i) {
-        var dist2 = 0.0
-        for (k <- 0 until d) { val df = yi(k) - y(j * d + k); dist2 += df * df }
-        exactQ += 1.0 / (1.0 + dist2)
-      }
+    for (i <- 0 until n; j <- 0 until n if j != i) {
+      var dist2 = 0.0
+      for (k <- 0 until d) { val df = y(i * d + k) - y(j * d + k); dist2 += df * df }
+      exactQ += 1.0 / (1.0 + dist2)
     }
-    assert(math.abs(approxQ - exactQ) / exactQ < 0.05,
-      s"BH sumQ $approxQ vs exact $exactQ")
+    for ((name, nonEdgeForces) <- forces(y, n, d)) {
+      var approxQ = 0.0
+      val negF = new Array[Double](n * d)
+      for (i <- 0 until n)
+        approxQ += nonEdgeForces(TSNEKernels.rowOf(y, d, i), 0.5, negF, i * d)
+      assert(math.abs(approxQ - exactQ) / exactQ < 0.05,
+        s"$name BH sumQ $approxQ vs exact $exactQ")
+    }
   }
 }
