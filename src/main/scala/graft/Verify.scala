@@ -93,6 +93,8 @@ object Verify {
       s"[verify] dumped $dumped/${surface.size} queries" +
         (if (dumped == surface.size) " — ALL GREEN"
          else s" — MISSING ${surface.keys.filterNot(n => new java.io.File(s"$outDir/$n").exists()).toSeq.sorted.mkString(", ")}"))
+    System.err.println(
+      s"[verify] persistent RDDs at end: ${spark.sparkContext.getPersistentRDDs.size}")
     spark.stop()
   }
 }

@@ -1,5 +1,6 @@
 package graft.examples
 
+import graft.CacheScope
 import graft.multimodal.{Codec, Multimodal, SignatureStore}
 import graft.ops.{Dedup, IvfIndex, MinHashBandStore, NoveltyBloomStore}
 import graft.text.{TextFunctions, TextQueries}
@@ -319,41 +320,17 @@ object DailyIngest {
   private def contentKey(textCol: String, prefixChars: Int) =
     NoveltyBloomStore.docKey(textCol, prefixChars)
 
-  /** Persistent-RDD ids right now — capture BEFORE a day's compute or
-    * probe, hand to [[sweepCaches]] once its consumers materialized. */
-  private[graft] def rddIds(spark: SparkSession): Set[Int] =
-    spark.sparkContext.getPersistentRDDs.keySet.toSet
-
-  /** Release a day's caches: the TRACKED frames (unpersisted through
-    * the Dataset API, which also drops their plan-cache entries), then
-    * any persistent RDD the day materialized beyond them — the probe
-    * paths pin operator-internal caches that surface no reference to
-    * release (video/audio pair post-select frames, store-probe
-    * internals), and without the sweep a long-running daily driver
-    * accumulates one set per day under storage LRU. RDD-level
-    * unpersist frees the storage; a plan-cache entry whose RDD was
-    * swept simply re-materializes if ever re-used (none of the day's
-    * plans are — the next day's frames differ). */
-  private[graft] def sweepCaches(spark: SparkSession, before: Set[Int],
-      caches: Seq[DataFrame]): Unit = {
-    caches.foreach(_.unpersist(true))
-    spark.sparkContext.getPersistentRDDs
-      .filterNot { case (id, _) => before(id) }
-      .values.foreach(_.unpersist(true))
-  }
-
   /** All intermediate day frames a completed day must materialize and
-    * append, plus every internal CACHE the day created (`caches`) so the
-    * daily loop can release them once the day's consumers are
-    * materialized — without the release, each day pins fresh day-sized
-    * entries (shingle signatures, image signatures, exploded
+    * append. The day's internal caches are registered with the caller's
+    * [[graft.CacheScope]], which releases them once the day's consumers
+    * are materialized — without the release, each day pins fresh
+    * day-sized entries (shingle signatures, image signatures, exploded
     * decontamination shingles) for the session lifetime. */
   private final case class DayFrames(canon: DataFrame, urlKept: DataFrame,
       exactKept: DataFrame, clean: DataFrame, textSurvivors: DataFrame,
       postQuality: DataFrame, mediaSurvivors: DataFrame,
       semSeen: Option[DataFrame], trainedCenters: Option[Array[Array[Double]]],
-      textDrops: DataFrame, mediaDrops: DataFrame,
-      caches: Seq[DataFrame])
+      textDrops: DataFrame, mediaDrops: DataFrame)
 
   /** The drop-log REASON vocabulary, in attribution-priority order.
     * Sequential stages partition drops by construction (a doc reaches
@@ -455,7 +432,7 @@ object DailyIngest {
     // probe): a probe-only day evaluates each probe once, and caching
     // there would pay storage-write cost for zero reuse
     def cacheIfAudit(df: DataFrame): DataFrame =
-      if (willWriteAudit) df.cache() else df
+      if (willWriteAudit) CacheScope.cache(df) else df
     if (willWriteAudit) {
       // the [[DropReasons]] unique-id precondition, enforced where the
       // drop log is actually derived — one aggregate pass over the day
@@ -523,16 +500,15 @@ object DailyIngest {
     val contaminated = TextQueries
       .contaminationAgainstBloom(exactKept, benchBloom, threshold = 0.05)
       .select("doc_id")
-    val clean = exactKept.join(qualityIds, Seq("doc_id"))
-      .join(contaminated, Seq("doc_id"), "left_anti")
-      .cache() // consumers: within-day pairs, store probes, appends, survivors join
+    // consumers: within-day pairs, store probes, appends, survivors join
+    val clean = CacheScope.cache(exactKept.join(qualityIds, Seq("doc_id"))
+      .join(contaminated, Seq("doc_id"), "left_anti"))
     // ---- stage 3: near-dup novelty ---------------------------------
     // within-day: drop a doc with an earlier-id near-dup partner TODAY;
     // cross-day: the band store sheds near-dups of any prior day's
     // clean docs. Both use the store's own est-Jaccard decision
     // function, so the union equals the batch rule exactly.
-    val (withinPairs, estCache) = MinHashBandStore.estPairsTracked(clean)
-    val withinDrops = withinPairs
+    val withinDrops = MinHashBandStore.estPairs(clean)
       .select(col("id_b").as("doc_id")).distinct()
     // cached: BOTH the survivor anti-join and the audit drop frame
     // (neardup_seen) consume this store probe — uncached, the band-
@@ -549,7 +525,7 @@ object DailyIngest {
     // semDropRows carries (doc_id, reason) — semantic_seen for the
     // frozen-history probe, semantic_dup_within_day for the within-day
     // rule — so the audit log can attribute without re-probing
-    val (semDropRows, semSeen, trainedCenters, semCaches) = dayEmb match {
+    val (semDropRows, semSeen, trainedCenters) = dayEmb match {
       case None =>
         // text-only mode is legitimate ONLY while no embedding store
         // exists: once one does, a vector-less day would neither probe
@@ -560,7 +536,7 @@ object DailyIngest {
           s"an embedding store exists at ${embStore(root)} but this day " +
             "supplied no vectors (dayEmb=None) — pass the day's embeddings " +
             "(an empty frame if the day truly has none) or remove the store")
-        (None, None, None, Nil)
+        (None, None, None)
       case Some(embDf) =>
         import graft.functions.VectorFunctions.arraySqNorm
         val cleanVecs = embDf.select(col("doc_id"), col("embedding"))
@@ -594,17 +570,16 @@ object DailyIngest {
               cfg.semNlist, cfg.semIters), true))
           else None
         centersOpt match {
-          case None => (None, Some(cleanVecs), None, Nil)
+          case None => (None, Some(cleanVecs), None)
           case Some((ctrs, trained)) =>
             // ONE quantizer-assignment pass for the whole stage: the
             // within-day self-join's two sides AND the store probe's
             // two consumptions (probed-cell collect + candidate join)
             // all read this cached frame (day-sized, spills past
             // memory; released with the day's other caches)
-            val assigned = IvfIndex
+            val assigned = CacheScope.cache(IvfIndex
               .assignCells(cleanVecs, ctrs, "doc_id", "embedding", cfg.semNprobe)
-              .withColumn("ord", col("id"))
-              .cache()
+              .withColumn("ord", col("id")))
             val within = semanticOrderedDropsFromAssigned(assigned,
               cfg.semThreshold)
             val cross =
@@ -621,8 +596,7 @@ object DailyIngest {
                 .unionByName(within
                   .withColumn("reason", lit("semantic_dup_within_day"))))
             (Some(semRows), Some(cleanVecs),
-              if (trained) Some(ctrs) else None,
-              Seq(assigned) ++ (if (willWriteAudit) Seq(semRows) else Nil))
+              if (trained) Some(ctrs) else None)
         }
     }
     val textSurvivors0 = crossKept.join(withinDrops, Seq("doc_id"), "left_anti")
@@ -640,11 +614,10 @@ object DailyIngest {
     // uncached, every consumer would re-run the quality DECODES (the
     // budget gate pins one quality pass per asset). Day-sized, spills
     // to disk under the default storage level.
-    val postQuality = Multimodal.survivorsBarrier(dayMedia, "daily_quality_in")
-      .join(lowInfo, Seq("media_id"), "left_anti")
-      .cache()
-    val (mediaPairs, sigCaches) = storeParityMediaPairsTracked(postQuality)
-    val mediaWithinDrops = mediaPairs
+    val postQuality = CacheScope.cache(
+      Multimodal.survivorsBarrier(dayMedia, "daily_quality_in")
+        .join(lowInfo, Seq("media_id"), "left_anti"))
+    val mediaWithinDrops = storeParityMediaPairs(postQuality)
       .select(col("id_b").as("media_id")).distinct()
     // cached for the same reason as crossKept: survivor anti-join +
     // audit drop frame share one perceptual store probe
@@ -683,10 +656,7 @@ object DailyIngest {
       mediaWithinDrops -> "media_neardup_dup_within_day"))
     DayFrames(canon, urlKept, exactKept, clean, textSurvivors,
       postQuality, mediaSurvivors, semSeen, trainedCenters,
-      textDrops, mediaDrops,
-      caches = Seq(clean, postQuality, estCache) ++ sigCaches ++
-        (if (willWriteAudit) Seq(crossKept, mediaCrossKept) else Nil) ++
-        semCaches)
+      textDrops, mediaDrops)
   }
 
   /** Pairwise media near-dup pairs under the SIGNATURE-STORE path's
@@ -696,23 +666,16 @@ object DailyIngest {
     * [[SignatureStore.matchedIds]]), video/audio by the containment
     * operators whose defaults the store path shares (video thumb budget
     * tightened to the store's 3.0). Ordered (id_a < id_b). */
-  private[graft] def storeParityMediaPairs(media: DataFrame): DataFrame =
-    storeParityMediaPairsTracked(media)._1
-
-  /** [[storeParityMediaPairs]] exposing its cached per-kind signature
-    * frames for the daily loop to release. Returns (pairs, sigCaches =
-    * Seq(imgSigs, vidSigs, audSigs)). */
-  private def storeParityMediaPairsTracked(media: DataFrame)
-      : (DataFrame, Seq[DataFrame]) = {
+  private[graft] def storeParityMediaPairs(media: DataFrame): DataFrame = {
     // cached: sims + thumbs consumers would otherwise decode twice.
     // DELIBERATE sharing beyond this function: imageSigRows' lambda is
     // capture-free (a singleton), so the store probe's identical
     // imageSigRows(media) plan resolves to THIS cache entry and both
     // consumers share one decode pass — the probe decode-budget gate
     // bills images at one signature pass, not two (SCALING.md round-16,
-    // cache-identity mechanics). Unmanaged callers inherit the
-    // Dedup.jaccardPairs cache-lifetime contract.
-    val imgSigs = SignatureStore.imageSigRows(media).cache()
+    // cache-identity mechanics). The caches belong to the caller's
+    // CacheScope (none open: a plain .cache() left to storage LRU).
+    val imgSigs = CacheScope.cache(SignatureStore.imageSigRows(media))
     // same mechanism for the A/V builders (r20): cache the RAW
     // videoSigRows/audioSigRows frames so BOTH in-function consumers
     // (the pair operators' post-select caches fill from here, not from
@@ -723,8 +686,8 @@ object DailyIngest {
     // sampleFrames UDF (see Multimodal.sampleFramesUdf) so the two
     // video plans canonicalize equal. The probe decode-budget gate pins
     // the per-kind pass counts.
-    val vidSigs = SignatureStore.videoSigRows(media, 2).cache()
-    val audSigs = SignatureStore.audioSigRows(media).cache()
+    val vidSigs = CacheScope.cache(SignatureStore.videoSigRows(media, 2))
+    val audSigs = CacheScope.cache(SignatureStore.audioSigRows(media))
     val mae = udf { (a: Array[Byte], b: Array[Byte]) => Codec.thumbMae(a, b) }
     val thumbs = imgSigs.select(col("media_id"), col("thumb"))
     val img = Dedup.hammingPairs(
@@ -739,8 +702,7 @@ object DailyIngest {
       .select(col("media_a").as("id_a"), col("media_b").as("id_b"))
     val aud = Multimodal.audioNearDupPairs(media)
       .select(col("media_a").as("id_a"), col("media_b").as("id_b"))
-    (img.unionByName(vid).unionByName(aud).distinct(),
-      Seq(imgSigs, vidSigs, audSigs))
+    img.unionByName(vid).unionByName(aud).distinct()
   }
 
   /** True iff every day in `[0, nDays)` holds its final ledger marker —
@@ -798,8 +760,7 @@ object DailyIngest {
     // ---- phase 1: pure compute + survivor/staging writes ------------
     val counts: DayCounts =
       if (exists(spark, computedMarker)) readCounts(spark, computedMarker)
-      else {
-        val rddsBefore = rddIds(spark)
+      else CacheScope(spark) {
         val f = processDay(spark, dayDocs, dayMedia, dayEmb, benchBloom,
           root, cfg, willWriteAudit = cfg.auditLog)
         // survivors (with the packing metadata a shard writer needs),
@@ -807,10 +768,10 @@ object DailyIngest {
         // the probe plans read. ONE evaluation of the text-survivor
         // pipeline for its three writers (id list, shard index, shard
         // streams) — the media-side mediaSurv discipline
-        val textSurv = f.textSurvivors
+        val textSurv = CacheScope.persist(f.textSurvivors
           .select(col("doc_id"), col("source"), col("text"),
-            TextFunctions.bpeTokenCount(col("text")).as("n_bpe"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            TextFunctions.bpeTokenCount(col("text")).as("n_bpe")),
+          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         // per-day admission cap (see IngestConfig.dailyBpeBudget):
         // quality-best-first prefix until the BPE budget fills; the
         // STORES below still append the full seen/clean sets — a
@@ -820,8 +781,8 @@ object DailyIngest {
             // NOT persisted again here: every consumer is a cheap map
             // over admitByBudget's internally persisted sorted RDD —
             // a third cached copy of the day's text (after textSurv
-            // and that RDD) would buy nothing (the day's cache sweep
-            // releases the internal RDD via the rddIds diff)
+            // and that RDD) would buy nothing (the day's CacheScope
+            // sweeps the internal RDD)
             val adm = graft.ops.Corpus.admitByBudget(
               textSurv.withColumn("_q",
                 TextFunctions.qualityScore(col("text"))),
@@ -854,9 +815,9 @@ object DailyIngest {
         // the shard index, and the byte assembly; without the persist,
         // each write re-runs the perceptual store probe over the day.
         // Day-sized (payloads included), spills to disk; released with
-        // the day's other caches below.
-        val mediaSurv = f.mediaSurvivors
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        // the day's other caches when the scope closes.
+        val mediaSurv = CacheScope.persist(f.mediaSurvivors,
+          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         mediaSurv.select(col("media_id"), col("kind"))
           .write.mode("overwrite").parquet(mediaOut(root, day))
         // training-ready media byte shards for the day: packed payload
@@ -930,7 +891,6 @@ object DailyIngest {
           mediaKept = spark.read.parquet(mediaOut(root, day)).count(),
           textShards = shards, mediaShards = mShards)
         writeCounts(spark, computedMarker, c)
-        sweepCaches(spark, rddsBefore, f.caches ++ Seq(mediaSurv, textSurv))
         c
       }
     counts
@@ -1019,10 +979,12 @@ object DailyIngest {
     * current stores with NO writes, NO appends, NO ledger — what a
     * dry-run or a bench rep measures, and what the decode-budget gate
     * drives twice. Returns (text survivors, media survivors). The
-    * returned frames still reference the day's internal caches — this
-    * form leaves them to storage LRU (acceptable for one-shot calls);
-    * a LOOPING caller (bench reps, a long-lived dry-run scheduler)
-    * should use [[probeDayTracked]] and release them per iteration. */
+    * returned frames still reference the day's internal caches, which
+    * register with the caller's [[graft.CacheScope]]. With no scope open
+    * they are left to storage LRU (acceptable for one-shot calls); a
+    * LOOPING caller (bench reps, a long-lived dry-run scheduler) wraps
+    * each call, and the materialization of its results, in a scope, and
+    * passes one `benchBloom` it destroys itself. */
   def probeDay(spark: SparkSession, dayDocs: DataFrame, dayMedia: DataFrame,
       benchDocs: DataFrame, root: String,
       benchBloom: Option[org.apache.spark.broadcast.Broadcast[
@@ -1033,34 +995,9 @@ object DailyIngest {
     // contract — like the caches, acceptable once, not in a loop)
     val bloom = benchBloom.getOrElse(
       TextQueries.benchContaminationBloom(benchDocs, fpp = 1e-4))
-    val (txt, med, _) = probeDayTracked(spark, dayDocs, dayMedia,
-      root, bloom, dayEmb, cfg)
-    (txt, med)
-  }
-
-  /** [[probeDay]] exposing the day's internal caches (the
-    * `estPairsTracked` pattern): a looping caller captures
-    * [[rddIds]] BEFORE the call, materializes the survivor frames,
-    * then calls [[sweepCaches]] with the returned refs so bench reps /
-    * daily dry-runs hold steady-state storage flat instead of
-    * accumulating day-sized entries under storage LRU (the tracked
-    * refs alone under-release: the probe paths pin operator-internal
-    * caches too — see [[sweepCaches]]). */
-  private[graft] def probeDayTracked(spark: SparkSession, dayDocs: DataFrame,
-      dayMedia: DataFrame, root: String,
-      benchBloom: org.apache.spark.broadcast.Broadcast[
-        org.apache.spark.util.sketch.BloomFilter],
-      dayEmb: Option[DataFrame] = None,
-      cfg: IngestConfig = IngestConfig())
-      : (DataFrame, DataFrame, Seq[DataFrame]) = {
-    // the bench bloom is REQUIRED here, not built on demand: this is
-    // the looping-caller API, and a per-iteration broadcast that only
-    // the callee knows about cannot be destroyed by the caller — the
-    // exact accumulation ingestDay's finally-destroy closes. The loop
-    // owns one bloom for its lifetime and destroys it when done.
     requireNoPendingTakedown(spark, root)
-    val f = processDay(spark, dayDocs, dayMedia, dayEmb, benchBloom, root, cfg)
-    (f.textSurvivors, f.mediaSurvivors, f.caches)
+    val f = processDay(spark, dayDocs, dayMedia, dayEmb, bloom, root, cfg)
+    (f.textSurvivors, f.mediaSurvivors)
   }
 
   /** Ingest days `0 until nDays` (ledger-idempotent; see

@@ -282,7 +282,8 @@ object MultimodalQueries {
     // cached: perceptualNoveltyBatch consumes incoming three times
     // (signature builder, verify payload join, survivors barrier) and
     // incoming carries the re-encode/synthesis UDFs — one
-    // materialization feeds all three (r20; unmanaged cache)
+    // materialization feeds all three (r20; unmanaged: a caller's
+    // CacheScope sweeps it, storage LRU otherwise)
     Multimodal.perceptualNoveltyBatch(
         noveltyIncoming(s, d).cache(), Multimodal.syntheticMedia(s, d))
       .select(col("media_id"), col("kind"))
@@ -474,8 +475,8 @@ object MultimodalQueries {
     // cached: the novelty anti-join evaluates incoming twice (the
     // survivors barrier plus the three per-kind signature builders),
     // and incoming is a synthesis-UDF-heavy plan (JPEG re-encode
-    // twins) — one materialization feeds both (r20; unmanaged cache —
-    // the jaccardPairs storage-LRU lifetime contract)
+    // twins) — one materialization feeds both (r20; unmanaged: a
+    // caller's CacheScope sweeps it — the jaccardPairs lifetime contract)
     val incoming = noveltyIncomingAllKinds(s, d).cache()
     SignatureStore.noveltyAgainstStore(incoming, SignatureStore.load(s, dir))
       .select(col("media_id"), col("kind"))
@@ -534,7 +535,8 @@ object MultimodalQueries {
     buildStoreIfAbsent(s, dir, benchCohort(s, d))
     // cached: the census join evaluates training twice (the survivors
     // barrier plus the three per-kind signature builders) over a
-    // synthesis-UDF-heavy plan — one materialization feeds both (r20)
+    // synthesis-UDF-heavy plan — one materialization feeds both (r20;
+    // unmanaged: a caller's CacheScope sweeps it)
     val training = trainingWithBenchLeakage(s, d).cache()
     val flagged = SignatureStore.matchedAgainstStore(
       training, SignatureStore.load(s, dir))

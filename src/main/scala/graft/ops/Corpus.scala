@@ -239,9 +239,7 @@ object Corpus {
     * within partitions, ONE bounded pass collecting per-partition
     * weight sums (numPartitions scalars), driver prefix-sums them, and
     * a second pass streams each partition against its broadcast offset.
-    * The two passes share one sorted RDD (persisted MEMORY_AND_DISK —
-    * caller lifecycle releases it: the daily loop's cache sweep, or
-    * storage LRU for one-shot callers).
+    * The two passes share one sorted RDD (persisted MEMORY_AND_DISK).
     *
     * `order` must be a TOTAL order (include a unique id as tie-break;
     * the daily-ingest keystone passes doc_id) — ties at the admission
@@ -250,22 +248,13 @@ object Corpus {
     * over the order key), so the obligation is the caller's.
     *
     * Lifecycle: the shared sorted RDD stays persisted after this call
-    * (both the offset collect and the caller's evaluation read it) —
-    * one-shot callers leave it to storage LRU / session end; looping
-    * callers use [[admitByBudgetTracked]] and release per iteration
-    * (the daily loop's cache sweep does this via its RDD census). */
+    * (both the offset collect and the caller's evaluation read it).
+    * A looping caller wraps each call, and the materialization of its
+    * result, in a [[graft.CacheScope]], which sweeps the RDD (the daily
+    * loop does this per day); one-shot callers leave it to storage LRU /
+    * session end. */
   def admitByBudget(df: DataFrame, order: Seq[Column], weight: Column,
-      budget: Long): DataFrame =
-    admitByBudgetTracked(df, order, weight, budget)._1
-
-  /** [[admitByBudget]] returning the marked frame PLUS a release
-    * handle for the internal sorted RDD: call it once the marked frame
-    * (and everything derived from it) is materialized. Releasing
-    * earlier is safe for correctness — the range partitioning and
-    * within-partition sort are deterministic, so a re-evaluation
-    * reproduces the same prefix — but re-pays the sort. */
-  def admitByBudgetTracked(df: DataFrame, order: Seq[Column], weight: Column,
-      budget: Long): (DataFrame, () => Unit) = {
+      budget: Long): DataFrame = {
     require(budget >= 0, s"budget must be >= 0, got $budget")
     require(order.nonEmpty, "admitByBudget needs an order")
     val spark = df.sparkSession
@@ -301,10 +290,9 @@ object Corpus {
         org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (cum <= budget))
       }
     }
-    val out = spark.createDataFrame(marked, schema
+    spark.createDataFrame(marked, schema
         .add(org.apache.spark.sql.types.StructField("admitted",
           org.apache.spark.sql.types.BooleanType, nullable = false)))
       .drop("_w")
-    (out, () => { rdd.unpersist(false); () })
   }
 }

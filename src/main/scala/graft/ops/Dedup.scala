@@ -45,9 +45,11 @@ object Dedup {
     // shingle once, cache: the postings branch and the sizes branch would
     // otherwise re-tokenize + re-shingle the corpus.
     // CACHE LIFETIME: the cached frame backs the (lazy) returned DataFrame
-    // and therefore cannot be unpersisted here; it is released by Spark's
-    // storage LRU or `spark.catalog.clearCache()`. Same applies to the
-    // other sketch operators in this file.
+    // and therefore cannot be unpersisted here; a looping caller wraps
+    // the call and its consumers in a graft.CacheScope, which sweeps it.
+    // With no scope open it is left to storage LRU or
+    // `spark.catalog.clearCache()`. Same applies to the other sketch
+    // operators in this file.
     val docSh = docs
       .select(col(idCol).cast("long").as("id"), shinglesFast(n)(tokens(col(textCol))).as("sh"))
       .cache()
@@ -122,8 +124,9 @@ object Dedup {
     * is the scale twin whose per-source state never grows.
     *
     * CACHE LIFETIME: the shingle frame backs all three consumers of the
-    * (lazy) result — released by storage LRU or `clearCache()`, same
-    * contract as the other sketch operators in this file. */
+    * (lazy) result — released by the caller's [[graft.CacheScope]], or
+    * with none open by storage LRU / `clearCache()`, same contract as
+    * the other sketch operators in this file. */
   def sourceOverlap(docs: DataFrame, textCol: String = "text",
       srcCol: String = "source", n: Int = 3): DataFrame = {
     val sh = docs

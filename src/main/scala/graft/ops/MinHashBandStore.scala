@@ -384,25 +384,17 @@ object MinHashBandStore {
     * Jaccard can disagree, so an equivalence gate must use the same
     * estimator on both sides. At-scale caveat: the store probe bounds
     * hot buckets (`maxBucket` posting latch) while this self-join does
-    * not — parity holds wherever no bucket exceeds the cap. */
+    * not — parity holds wherever no bucket exceeds the cap.
+    *
+    * The signature frame is cached for its three consumers (both band
+    * sides + the sig joins would otherwise re-shingle) and belongs to the
+    * caller's [[graft.CacheScope]]: a looping caller (the daily-ingest
+    * driver) releases it per day with the scope; with no scope open it
+    * is left to storage LRU. */
   def estPairs(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", params: Params = Params(),
-      threshold: Double = 0.5): DataFrame =
-    estPairsTracked(docs, textCol, idCol, params, threshold)._1
-
-  /** [[estPairs]] exposing its internal cached signature frame so a
-    * LOOPING caller (the daily-ingest driver) can release it once the
-    * day's consumers are materialized — without this, every day pins a
-    * fresh day-sized entry for the session (the cache-accumulation
-    * class the memoized UDF fixed for same-batch probes). Returns
-    * (pairs, cachedRows); the caller owns cachedRows.unpersist(). */
-  private[graft] def estPairsTracked(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", params: Params = Params(),
-      threshold: Double = 0.5): (DataFrame, DataFrame) = {
-    // cache: three consumers (both band sides + the sig joins) would
-    // otherwise re-shingle; lifetime note on Dedup.jaccardPairs applies
-    // to the unmanaged public form
-    val rows = sigBandRows(docs, textCol, idCol, params).cache()
+      threshold: Double = 0.5): DataFrame = {
+    val rows = graft.CacheScope.cache(sigBandRows(docs, textCol, idCol, params))
     val bands = bandTable(rows)
     bands.as("a").join(bands.as("b"), Seq("band_id", "band_hash"))
       .where(col("a.doc_id") < col("b.doc_id"))
@@ -411,7 +403,7 @@ object MinHashBandStore {
       .join(rows.select(col("doc_id").as("id_a"), col("sig").as("_sa")), Seq("id_a"))
       .join(rows.select(col("doc_id").as("id_b"), col("sig").as("_sb")), Seq("id_b"))
       .where(estJaccard(col("_sa"), col("_sb"), params.numHashes) >= threshold)
-      .select(col("id_a"), col("id_b")) -> rows
+      .select(col("id_a"), col("id_b"))
   }
 
   /** (victim doc_id, history doc_id) pairs under the store's OWN

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Gate, Q, Tables}
+import graft.{CacheScope, Gate, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -2168,8 +2168,8 @@ object OpsQueries {
     * materialization of day-sized inputs. Partitioning and row order
     * are the plan's own evaluation, so every downstream decision
     * (windows keyed by id, treeAggregate sums) sees identical rows.
-    * Callers sweep the pinned RDD with the fn's rddIds diff so bench
-    * reps hold storage flat. */
+    * Callers pin inside the query's [[CacheScope]], which releases the
+    * pinned RDD so bench reps hold storage flat. */
   private def pinInput(df: DataFrame): DataFrame = df.localCheckpoint(true)
 
   /** THE KEYSTONE: daily-incremental ingest composing all FIVE
@@ -2215,45 +2215,38 @@ object OpsQueries {
     *     post-quality asset (the within-day pairs and the store probe
     *     share each kind's cached raw signature frame), zero
     *     history decodes (history is bloom bytes / band keys / signature
-    *     rows / probed index cells by construction) — and a tracked
-    *     probe releases every cache it created (storage-flat loop). */
+    *     rows / probed index cells by construction) — and a probe in a
+    *     CacheScope releases every cache it created (storage-flat loop). */
   val dailyIngest: Q = Q.gated("pipeline_daily_ingest") { (s, d) =>
     import graft.examples.DailyIngest
     val root = dailyRoot(s, d)
-    val rddsBefore = DailyIngest.rddIds(s) // before the pins: swept with them
-    val docs = pinInput(dailyDocs(s, d, IngestDays))
-    val media = pinInput(dailyMedia(s, d, IngestDays))
-    val emb = pinInput(dailyEmb(s, d, IngestDays))
-    val bench = dailyBench(s, d)
-    val cfg = DailyIngest.IngestConfig(bloomCapacity = dailyBloomCapacity(s, d))
-    // pin-to-sweep span under try/finally: a gate/collect failure
-    // mid-query must not strand the day-sized pinned blocks (plus the
-    // probe caches) in storage for the session
-    var caches: Seq[DataFrame] = Nil
-    var benchBloom: Option[org.apache.spark.broadcast.Broadcast[
-      org.apache.spark.util.sketch.BloomFilter]] = None
-    try {
+    // one scope from before the pins to after the collect: a gate/collect
+    // failure mid-query must not strand the day-sized pinned blocks (plus
+    // the probe caches) in storage for the session
+    CacheScope(s) {
+      val docs = pinInput(dailyDocs(s, d, IngestDays))
+      val media = pinInput(dailyMedia(s, d, IngestDays))
+      val emb = pinInput(dailyEmb(s, d, IngestDays))
+      val bench = dailyBench(s, d)
+      val cfg = DailyIngest.IngestConfig(bloomCapacity = dailyBloomCapacity(s, d))
       DailyIngest.run(s, docs, media, bench, root, IngestDays, cfg,
         emb = Some(emb))
       val bb = graft.text.TextQueries
         .benchContaminationBloom(bench, fpp = 1e-4)
-      benchBloom = Some(bb)
-      val (txt, med, cs) = DailyIngest.probeDayTracked(s,
-        docs.where(col("day") === IngestDays),
-        media.where(col("day") === IngestDays), root,
-        benchBloom = bb,
-        dayEmb = Some(emb.where(col("day") === IngestDays).drop("day")),
-        cfg = cfg)
-      caches = cs
-      val out = txt.select(col("doc_id").as("id"), lit("text").as("family"))
-        .unionByName(med.select(col("media_id").as("id"), lit("media").as("family")))
-      // materialize while the caches live, then release them — survivor
-      // ids are a bounded set (hundreds), not day-sized data
-      val rows = out.collect()
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-    } finally {
-      DailyIngest.sweepCaches(s, rddsBefore, caches)
-      benchBloom.foreach(_.destroy())
+      try {
+        val (txt, med) = DailyIngest.probeDay(s,
+          docs.where(col("day") === IngestDays),
+          media.where(col("day") === IngestDays), bench, root,
+          benchBloom = Some(bb),
+          dayEmb = Some(emb.where(col("day") === IngestDays).drop("day")),
+          cfg = cfg)
+        val out = txt.select(col("doc_id").as("id"), lit("text").as("family"))
+          .unionByName(med.select(col("media_id").as("id"), lit("media").as("family")))
+        // materialize while the caches live, then release them — survivor
+        // ids are a bounded set (hundreds), not day-sized data
+        val rows = out.collect()
+        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+      } finally bb.destroy()
     }
   } { (s, d, res) =>
     import graft.examples.DailyIngest
@@ -2539,20 +2532,22 @@ object OpsQueries {
         }
         quality + (if (pqToday(id)) sigPass else 0L)
       }.sum
-    // ---- 5. tracked probe releases everything it cached -------------
-    // the bench-loop contract: a probeDayTracked call whose caches are
-    // unpersisted leaves the persistent-RDD census exactly where it
-    // was (shared plan-matched entries may shrink it — never grow it).
-    // LAST, because unpersisting plan-shared entries would disturb
-    // earlier measurements.
-    val rddsBeforeIds = DailyIngest.rddIds(s)
-    val bloom2 = graft.text.TextQueries.benchContaminationBloom(bench, fpp = 1e-4)
-    val (txt3, med3, caches3) = DailyIngest.probeDayTracked(s,
-      docs.where(col("day") === D), todayMediaDf, root,
-      benchBloom = bloom2, dayEmb = Some(embToday), cfg = cfg)
-    txt3.count(); med3.count()
-    DailyIngest.sweepCaches(s, rddsBeforeIds, caches3)
-    bloom2.destroy()
+    // ---- 5. a scoped probe releases everything it cached -------------
+    // the bench-loop contract: a probeDay call in a CacheScope leaves
+    // the persistent-RDD census exactly where it was (shared
+    // plan-matched entries may shrink it — never grow it). LAST,
+    // because unpersisting plan-shared entries would disturb earlier
+    // measurements.
+    val rddsBefore = s.sparkContext.getPersistentRDDs.size
+    CacheScope(s) {
+      val bloom2 = graft.text.TextQueries.benchContaminationBloom(bench, fpp = 1e-4)
+      try {
+        val (txt3, med3) = DailyIngest.probeDay(s,
+          docs.where(col("day") === D), todayMediaDf, bench, root,
+          benchBloom = Some(bloom2), dayEmb = Some(embToday), cfg = cfg)
+        txt3.count(); med3.count()
+      } finally bloom2.destroy()
+    }
     val rddsAfter = s.sparkContext.getPersistentRDDs.size
     s2.unpersist(); postQ.unpersist(); docs.unpersist()
     Seq(
@@ -2588,8 +2583,8 @@ object OpsQueries {
       Gate("text_shard_docs_covered", tShardCov.toDouble,
         tShardCov == tShardExp && tShardExp > 0),
       Gate("probe_decode_budget_dev", (bill - expected).toDouble, bill == expected),
-      Gate("probe_cache_release_leak", (rddsAfter - rddsBeforeIds.size).toDouble,
-        rddsAfter <= rddsBeforeIds.size))
+      Gate("probe_cache_release_leak", (rddsAfter - rddsBefore).toDouble,
+        rddsAfter <= rddsBefore))
   }
 
   /** QUANTIZER REBUILD MID-HISTORY under the keystone — the composition
@@ -2613,44 +2608,42 @@ object OpsQueries {
     import graft.examples.DailyIngest
     val D = 3 // the planted-fixture day count; rebuild lands after day 1
     val root = dailyRoot(s, d) + "_rebuild"
-    val rddsAtStart = graft.examples.DailyIngest.rddIds(s)
-    // ledger-conditional pin + bloom (see ingestAudit): the steady-
-    // state rep short-circuits every ingestDay on its marker — neither
-    // the fixtures nor the bench bloom are ever read then
-    val done = DailyIngest.allDaysIngested(s, root, D + 1)
-    val pin: DataFrame => DataFrame = if (done) identity else pinInput
-    val docs = pin(dailyDocs(s, d, D))
-    val emb = pin(dailyEmb(s, d, D))
-    val bench = dailyBench(s, d)
-    val media = dailyMedia(s, d, D).where(lit(false))
-    val cfg = DailyIngest.IngestConfig(bloomCapacity = dailyBloomCapacity(s, d))
-    val bloom =
-      if (done) None
-      else Some(graft.text.TextQueries.benchContaminationBloom(bench, fpp = 1e-4))
-    try {
-      (0 to 1).foreach { i =>
-        DailyIngest.ingestDay(s, docs.where(col("day") === i), media, bench,
-          root, i, cfg, benchBloom = bloom,
-          dayEmb = Some(emb.where(col("day") === i).drop("day"))): Unit
-      }
-      // stage the retiring generation's centers for the gate's
-      // two-segment twin (the rebuild trashes the live copy)
-      val gen0Dir = s"$root/_gate/gen0_centers.parquet"
-      if (!new java.io.File(gen0Dir).exists())
-        s.read.parquet(s"${DailyIngest.embStore(root)}/centers.parquet")
-          .write.mode("overwrite").parquet(gen0Dir)
-      if (IvfIndex.generation(s, DailyIngest.embStore(root)) == 0)
-        IvfIndex.rebuild(s, DailyIngest.embStore(root), newNlist = 32)
-      (2 to D).foreach { i =>
-        DailyIngest.ingestDay(s, docs.where(col("day") === i), media, bench,
-          root, i, cfg, benchBloom = bloom,
-          dayEmb = Some(emb.where(col("day") === i).drop("day"))): Unit
-      }
-    } finally {
-      bloom.foreach(_.destroy())
-      // pins + any run() leftovers released: the returned frame reads
-      // only the per-day parquet outputs, never the pinned inputs
-      DailyIngest.sweepCaches(s, rddsAtStart, Nil)
+    // pins + any run() leftovers released with the scope: the returned
+    // frame reads only the per-day parquet outputs, never the pinned inputs
+    CacheScope(s) {
+      // ledger-conditional pin + bloom (see ingestAudit): the steady-
+      // state rep short-circuits every ingestDay on its marker — neither
+      // the fixtures nor the bench bloom are ever read then
+      val done = DailyIngest.allDaysIngested(s, root, D + 1)
+      val pin: DataFrame => DataFrame = if (done) identity else pinInput
+      val docs = pin(dailyDocs(s, d, D))
+      val emb = pin(dailyEmb(s, d, D))
+      val bench = dailyBench(s, d)
+      val media = dailyMedia(s, d, D).where(lit(false))
+      val cfg = DailyIngest.IngestConfig(bloomCapacity = dailyBloomCapacity(s, d))
+      val bloom =
+        if (done) None
+        else Some(graft.text.TextQueries.benchContaminationBloom(bench, fpp = 1e-4))
+      try {
+        (0 to 1).foreach { i =>
+          DailyIngest.ingestDay(s, docs.where(col("day") === i), media, bench,
+            root, i, cfg, benchBloom = bloom,
+            dayEmb = Some(emb.where(col("day") === i).drop("day"))): Unit
+        }
+        // stage the retiring generation's centers for the gate's
+        // two-segment twin (the rebuild trashes the live copy)
+        val gen0Dir = s"$root/_gate/gen0_centers.parquet"
+        if (!new java.io.File(gen0Dir).exists())
+          s.read.parquet(s"${DailyIngest.embStore(root)}/centers.parquet")
+            .write.mode("overwrite").parquet(gen0Dir)
+        if (IvfIndex.generation(s, DailyIngest.embStore(root)) == 0)
+          IvfIndex.rebuild(s, DailyIngest.embStore(root), newNlist = 32)
+        (2 to D).foreach { i =>
+          DailyIngest.ingestDay(s, docs.where(col("day") === i), media, bench,
+            root, i, cfg, benchBloom = bloom,
+            dayEmb = Some(emb.where(col("day") === i).drop("day"))): Unit
+        }
+      } finally bloom.foreach(_.destroy())
     }
     (0 to D).map(i => s.read.parquet(DailyIngest.textOut(root, i))
         .select(col("doc_id"), lit(i).as("day")))
@@ -2757,155 +2750,154 @@ object OpsQueries {
     import graft.examples.DailyIngest
     val D = 2
     val root = dailyRoot(s, d) + "_hotspot"
-    val rddsAtStart = DailyIngest.rddIds(s)
-    val bench = dailyBench(s, d)
-    val media = dailyMedia(s, d, D).where(lit(false))
-    val dim = Tables.embeddings(s, d)
-      .select(size(col("embedding")).as("n")).head.getInt(0)
-    val n = Tables.embeddings(s, d).count() / 2
-    // per-cell budget calibrated to the WORST-case surge the fixture
-    // plants: the anchored shell puts ≥97% of its n vectors in one cell
-    // (trip side needs budget < ~n), while on the clear side a k-means
-    // rebuild can only split a high-dim isotropic shell into a FEW
-    // cells — its points are near-equidistant (concentration of
-    // measure), so Lloyd's reliably yields ≥2 sub-cells, not the
-    // ∝-mass allocation a structured region would get (measured: 250
-    // shell points → 2–3 cells at 32 centers; 1000 → 5–6). 3n/4 sits
-    // between ~n (trip) and ~n/2 (worst split) with margin on both
-    // sides at every tested geometry; real surges have internal
-    // structure and split finer, so the budget is conservative there
-    val budget = math.max(1L, 3 * n / 4)
-    val surgeIds = s.range(n).select((col("id") + HotspotSurgeBase).as("doc_id"))
-    val docs0 = dailyDocs(s, d, D)
-    val surgeDocs = surgeIds
-      .select(col("doc_id"), freshTextUdf(col("doc_id")).as("text"),
-        lit("en").as("lang"), lit("surge").as("source"))
-      .withColumn("n_chars", length(col("text")).cast("long"))
-      .withColumn("day", lit(1).cast("int"))
-      .withColumn("url",
-        concat(lit("https://surge.ex/s/"), col("doc_id").cast("string")))
-    // ledger-conditional pin + bloom (see ingestAudit): the steady-
-    // state rep short-circuits every ingestDay on its marker and reads
-    // only the staged gate parquet — fixtures and bloom untouched then
-    val done = DailyIngest.allDaysIngested(s, root, D + 1)
-    val pin: DataFrame => DataFrame = if (done) identity else pinInput
-    val docs = pin(
-      docs0.unionByName(surgeDocs.select(docs0.columns.map(col): _*)))
-    val embBase = pin(dailyEmb(s, d, D))
-    val cfg = DailyIngest.IngestConfig(bloomCapacity = dailyBloomCapacity(s, d))
-    val bloom =
-      if (done) None
-      else Some(graft.text.TextQueries.benchContaminationBloom(bench, fpp = 1e-4))
-    val store = DailyIngest.embStore(root)
-    val gateStage = s"$root/_gate/plan_before.parquet"
-    try {
-      DailyIngest.ingestDay(s, docs.where(col("day") === 0), media, bench,
-        root, 0, cfg, benchBloom = bloom,
-        dayEmb = Some(embBase.where(col("day") === 0).drop("day"))): Unit
-      // the surge region is anchored on a TRAINED center of the day-0
-      // quantizer (read from the live store) rather than a fixed axis
-      // direction: an axis-anchored blob straddles however many Voronoi
-      // cells the REAL data put near that direction (measured at sf0.1:
-      // 7 of 16 cells, none over budget — no hotspot at all), while a
-      // center-anchored shell of radius 0.6·|c*| lands ≥97% in the
-      // anchor cell at every tested geometry AND keeps pairwise cosine
-      // ≤~0.88 (the exact-norm shell makes the bound scale-invariant:
-      // cos ≈ 1/(1+r²) with r = 0.6). Staged to parquet so ledger-
-      // idempotent reps reuse the gen-1-derived surge after the rebuild
-      // replaced the centers it was derived from.
-      val surgeStage = s"$root/_gate/surge_emb.parquet"
-      if (!new java.io.File(surgeStage).exists()) {
-        val centers = IvfIndex.loadCenters(s, store)
-        val heavy = s.read.parquet(s"$store/postings.parquet")
-          .groupBy("cell").agg(count(lit(1)).as("cnt"))
-          .orderBy(col("cnt").desc, col("cell")).head.getInt(0)
-        val cStar = centers(heavy)
-        val cNorm = math.sqrt(cStar.map(x => x * x).sum)
-        val surgeVec = udf { (id: Long) =>
-          val noise = Array.tabulate(dim) { i =>
-            var z = id * 6364136223846793005L + i * 1442695040888963407L
-            z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-            z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-            z = z ^ (z >>> 31)
-            java.lang.Math.floorMod(z, 1000L).toDouble / 1000.0 - 0.5
+    // pins released with the scope: the returned frame reads only parquet
+    // outputs
+    CacheScope(s) {
+      val bench = dailyBench(s, d)
+      val media = dailyMedia(s, d, D).where(lit(false))
+      val dim = Tables.embeddings(s, d)
+        .select(size(col("embedding")).as("n")).head.getInt(0)
+      val n = Tables.embeddings(s, d).count() / 2
+      // per-cell budget calibrated to the WORST-case surge the fixture
+      // plants: the anchored shell puts ≥97% of its n vectors in one cell
+      // (trip side needs budget < ~n), while on the clear side a k-means
+      // rebuild can only split a high-dim isotropic shell into a FEW
+      // cells — its points are near-equidistant (concentration of
+      // measure), so Lloyd's reliably yields ≥2 sub-cells, not the
+      // ∝-mass allocation a structured region would get (measured: 250
+      // shell points → 2–3 cells at 32 centers; 1000 → 5–6). 3n/4 sits
+      // between ~n (trip) and ~n/2 (worst split) with margin on both
+      // sides at every tested geometry; real surges have internal
+      // structure and split finer, so the budget is conservative there
+      val budget = math.max(1L, 3 * n / 4)
+      val surgeIds = s.range(n).select((col("id") + HotspotSurgeBase).as("doc_id"))
+      val docs0 = dailyDocs(s, d, D)
+      val surgeDocs = surgeIds
+        .select(col("doc_id"), freshTextUdf(col("doc_id")).as("text"),
+          lit("en").as("lang"), lit("surge").as("source"))
+        .withColumn("n_chars", length(col("text")).cast("long"))
+        .withColumn("day", lit(1).cast("int"))
+        .withColumn("url",
+          concat(lit("https://surge.ex/s/"), col("doc_id").cast("string")))
+      // ledger-conditional pin + bloom (see ingestAudit): the steady-
+      // state rep short-circuits every ingestDay on its marker and reads
+      // only the staged gate parquet — fixtures and bloom untouched then
+      val done = DailyIngest.allDaysIngested(s, root, D + 1)
+      val pin: DataFrame => DataFrame = if (done) identity else pinInput
+      val docs = pin(
+        docs0.unionByName(surgeDocs.select(docs0.columns.map(col): _*)))
+      val embBase = pin(dailyEmb(s, d, D))
+      val cfg = DailyIngest.IngestConfig(bloomCapacity = dailyBloomCapacity(s, d))
+      val bloom =
+        if (done) None
+        else Some(graft.text.TextQueries.benchContaminationBloom(bench, fpp = 1e-4))
+      val store = DailyIngest.embStore(root)
+      val gateStage = s"$root/_gate/plan_before.parquet"
+      try {
+        DailyIngest.ingestDay(s, docs.where(col("day") === 0), media, bench,
+          root, 0, cfg, benchBloom = bloom,
+          dayEmb = Some(embBase.where(col("day") === 0).drop("day"))): Unit
+        // the surge region is anchored on a TRAINED center of the day-0
+        // quantizer (read from the live store) rather than a fixed axis
+        // direction: an axis-anchored blob straddles however many Voronoi
+        // cells the REAL data put near that direction (measured at sf0.1:
+        // 7 of 16 cells, none over budget — no hotspot at all), while a
+        // center-anchored shell of radius 0.6·|c*| lands ≥97% in the
+        // anchor cell at every tested geometry AND keeps pairwise cosine
+        // ≤~0.88 (the exact-norm shell makes the bound scale-invariant:
+        // cos ≈ 1/(1+r²) with r = 0.6). Staged to parquet so ledger-
+        // idempotent reps reuse the gen-1-derived surge after the rebuild
+        // replaced the centers it was derived from.
+        val surgeStage = s"$root/_gate/surge_emb.parquet"
+        if (!new java.io.File(surgeStage).exists()) {
+          val centers = IvfIndex.loadCenters(s, store)
+          val heavy = s.read.parquet(s"$store/postings.parquet")
+            .groupBy("cell").agg(count(lit(1)).as("cnt"))
+            .orderBy(col("cnt").desc, col("cell")).head.getInt(0)
+          val cStar = centers(heavy)
+          val cNorm = math.sqrt(cStar.map(x => x * x).sum)
+          val surgeVec = udf { (id: Long) =>
+            val noise = Array.tabulate(dim) { i =>
+              var z = id * 6364136223846793005L + i * 1442695040888963407L
+              z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
+              z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
+              z = z ^ (z >>> 31)
+              java.lang.Math.floorMod(z, 1000L).toDouble / 1000.0 - 0.5
+            }
+            val nn = math.sqrt(noise.map(x => x * x).sum)
+            val scale = 0.6 * cNorm / math.max(nn, 1e-12)
+            Array.tabulate(dim)(i => (cStar(i) + noise(i) * scale).toFloat).toSeq
           }
-          val nn = math.sqrt(noise.map(x => x * x).sum)
-          val scale = 0.6 * cNorm / math.max(nn, 1e-12)
-          Array.tabulate(dim)(i => (cStar(i) + noise(i) * scale).toFloat).toSeq
+          surgeIds.select(col("doc_id"), surgeVec(col("doc_id")).as("embedding"))
+            .write.mode("overwrite").parquet(surgeStage)
         }
-        surgeIds.select(col("doc_id"), surgeVec(col("doc_id")).as("embedding"))
-          .write.mode("overwrite").parquet(surgeStage)
-      }
-      val surgeEmb = s.read.parquet(surgeStage)
-      val emb = embBase.unionByName(surgeEmb
-        .withColumn("day", lit(1).cast("int")))
-      (1 to 1).foreach { i =>
-        DailyIngest.ingestDay(s, docs.where(col("day") === i), media, bench,
-          root, i, cfg, benchBloom = bloom,
-          dayEmb = Some(emb.where(col("day") === i).drop("day"))): Unit
-      }
-      // stage the pre-rebuild policy verdicts (the gen0_centers pattern:
-      // later ledger-idempotent reps see the post-rebuild store)
-      if (!new java.io.File(gateStage).exists()) {
-        import s.implicits._
-        val mean = DailyIngest.maintenanceAdvice(s, root).get
-        val plan = DailyIngest.maintenancePlan(s, root,
-          maxPostingsPerCell = budget).get
-        Seq((mean.reason, plan.reason, plan.act, plan.suggestedNlist,
-            plan.rebuild.nlist, plan.hotspot.recommendSplit,
-            plan.hotspot.recommendRebuild, plan.hotspot.overCells.size))
-          .toDF("mean_reason", "plan_reason", "plan_act", "suggested_nlist",
-            "nlist_before", "rec_split", "rec_rebuild", "over_cells")
-          .repartition(1).write.mode("overwrite").parquet(gateStage)
-      }
-      val staged = s.read.parquet(gateStage).head
-      if (IvfIndex.generation(s, store) == 0 && staged.getAs[Boolean]("plan_act"))
-        IvfIndex.rebuild(s, store, staged.getAs[Int]("suggested_nlist"))
-      // "the acted rebuild clears it" is judged HERE, before day 2: a
-      // later normal day can legitimately read as occupancy DRIFT
-      // against the surge-inflated reference (the monitor working, not
-      // the hotspot persisting) — staged so ledger-idempotent reps see
-      // the same verdict
-      val afterStage = s"$root/_gate/plan_after.parquet"
-      if (!new java.io.File(afterStage).exists()) {
-        import s.implicits._
-        val planAfter = DailyIngest.maintenancePlan(s, root,
-          maxPostingsPerCell = budget).get
-        val maxMass = s.read.parquet(s"$store/postings.parquet")
-          .groupBy("cell").agg(count(lit(1)).as("cnt"))
-          .agg(max(col("cnt"))).head.getLong(0)
-        Seq((planAfter.act, planAfter.reason, maxMass))
-          .toDF("after_act", "after_reason", "max_mass")
-          .repartition(1).write.mode("overwrite").parquet(afterStage)
-      }
-      val stagedAfter = s.read.parquet(afterStage).head
-      (2 to D).foreach { i =>
-        DailyIngest.ingestDay(s, docs.where(col("day") === i), media, bench,
-          root, i, cfg, benchBloom = bloom,
-          dayEmb = Some(emb.where(col("day") === i).drop("day"))): Unit
-      }
-      val surgeKept = s.read.parquet(DailyIngest.textOut(root, 1))
-        .where(col("doc_id") >= HotspotSurgeBase).count()
-      s.read.parquet(DailyIngest.textOut(root, D)).select(col("doc_id"))
-        .withColumn("mean_reason", lit(staged.getAs[String]("mean_reason")))
-        .withColumn("plan_reason", lit(staged.getAs[String]("plan_reason")))
-        .withColumn("plan_act", lit(staged.getAs[Boolean]("plan_act")))
-        .withColumn("suggested_nlist", lit(staged.getAs[Int]("suggested_nlist")))
-        .withColumn("nlist_before", lit(staged.getAs[Int]("nlist_before")))
-        .withColumn("rec_split", lit(staged.getAs[Boolean]("rec_split")))
-        .withColumn("rec_rebuild", lit(staged.getAs[Boolean]("rec_rebuild")))
-        .withColumn("over_cells", lit(staged.getAs[Int]("over_cells").toLong))
-        .withColumn("gen_after", lit(IvfIndex.generation(s, store)))
-        .withColumn("plan_after_act", lit(stagedAfter.getAs[Boolean]("after_act")))
-        .withColumn("plan_after_reason", lit(stagedAfter.getAs[String]("after_reason")))
-        .withColumn("max_mass_after", lit(stagedAfter.getAs[Long]("max_mass")))
-        .withColumn("budget", lit(budget))
-        .withColumn("surge_kept", lit(surgeKept))
-        .withColumn("surge_n", lit(n))
-    } finally {
-      bloom.foreach(_.destroy())
-      // pins released: the returned frame reads only parquet outputs
-      DailyIngest.sweepCaches(s, rddsAtStart, Nil)
+        val surgeEmb = s.read.parquet(surgeStage)
+        val emb = embBase.unionByName(surgeEmb
+          .withColumn("day", lit(1).cast("int")))
+        (1 to 1).foreach { i =>
+          DailyIngest.ingestDay(s, docs.where(col("day") === i), media, bench,
+            root, i, cfg, benchBloom = bloom,
+            dayEmb = Some(emb.where(col("day") === i).drop("day"))): Unit
+        }
+        // stage the pre-rebuild policy verdicts (the gen0_centers pattern:
+        // later ledger-idempotent reps see the post-rebuild store)
+        if (!new java.io.File(gateStage).exists()) {
+          import s.implicits._
+          val mean = DailyIngest.maintenanceAdvice(s, root).get
+          val plan = DailyIngest.maintenancePlan(s, root,
+            maxPostingsPerCell = budget).get
+          Seq((mean.reason, plan.reason, plan.act, plan.suggestedNlist,
+              plan.rebuild.nlist, plan.hotspot.recommendSplit,
+              plan.hotspot.recommendRebuild, plan.hotspot.overCells.size))
+            .toDF("mean_reason", "plan_reason", "plan_act", "suggested_nlist",
+              "nlist_before", "rec_split", "rec_rebuild", "over_cells")
+            .repartition(1).write.mode("overwrite").parquet(gateStage)
+        }
+        val staged = s.read.parquet(gateStage).head
+        if (IvfIndex.generation(s, store) == 0 && staged.getAs[Boolean]("plan_act"))
+          IvfIndex.rebuild(s, store, staged.getAs[Int]("suggested_nlist"))
+        // "the acted rebuild clears it" is judged HERE, before day 2: a
+        // later normal day can legitimately read as occupancy DRIFT
+        // against the surge-inflated reference (the monitor working, not
+        // the hotspot persisting) — staged so ledger-idempotent reps see
+        // the same verdict
+        val afterStage = s"$root/_gate/plan_after.parquet"
+        if (!new java.io.File(afterStage).exists()) {
+          import s.implicits._
+          val planAfter = DailyIngest.maintenancePlan(s, root,
+            maxPostingsPerCell = budget).get
+          val maxMass = s.read.parquet(s"$store/postings.parquet")
+            .groupBy("cell").agg(count(lit(1)).as("cnt"))
+            .agg(max(col("cnt"))).head.getLong(0)
+          Seq((planAfter.act, planAfter.reason, maxMass))
+            .toDF("after_act", "after_reason", "max_mass")
+            .repartition(1).write.mode("overwrite").parquet(afterStage)
+        }
+        val stagedAfter = s.read.parquet(afterStage).head
+        (2 to D).foreach { i =>
+          DailyIngest.ingestDay(s, docs.where(col("day") === i), media, bench,
+            root, i, cfg, benchBloom = bloom,
+            dayEmb = Some(emb.where(col("day") === i).drop("day"))): Unit
+        }
+        val surgeKept = s.read.parquet(DailyIngest.textOut(root, 1))
+          .where(col("doc_id") >= HotspotSurgeBase).count()
+        s.read.parquet(DailyIngest.textOut(root, D)).select(col("doc_id"))
+          .withColumn("mean_reason", lit(staged.getAs[String]("mean_reason")))
+          .withColumn("plan_reason", lit(staged.getAs[String]("plan_reason")))
+          .withColumn("plan_act", lit(staged.getAs[Boolean]("plan_act")))
+          .withColumn("suggested_nlist", lit(staged.getAs[Int]("suggested_nlist")))
+          .withColumn("nlist_before", lit(staged.getAs[Int]("nlist_before")))
+          .withColumn("rec_split", lit(staged.getAs[Boolean]("rec_split")))
+          .withColumn("rec_rebuild", lit(staged.getAs[Boolean]("rec_rebuild")))
+          .withColumn("over_cells", lit(staged.getAs[Int]("over_cells").toLong))
+          .withColumn("gen_after", lit(IvfIndex.generation(s, store)))
+          .withColumn("plan_after_act", lit(stagedAfter.getAs[Boolean]("after_act")))
+          .withColumn("plan_after_reason", lit(stagedAfter.getAs[String]("after_reason")))
+          .withColumn("max_mass_after", lit(stagedAfter.getAs[Long]("max_mass")))
+          .withColumn("budget", lit(budget))
+          .withColumn("surge_kept", lit(surgeKept))
+          .withColumn("surge_n", lit(n))
+      } finally bloom.foreach(_.destroy())
     }
   } { (s, d, res) =>
     val head = res.select("mean_reason", "plan_reason", "plan_act",
@@ -2975,166 +2967,162 @@ object OpsQueries {
     import graft.examples.DailyIngest
     val D = 3 // the planted-fixture day count (sem twins exist only here)
     val root = dailyRoot(s, d) + "_takedown"
-    val rddsAtStart = DailyIngest.rddIds(s) // before the pins: swept with them
-    val docs = pinInput(dailyDocs(s, d, D))
-    val media = pinInput(dailyMedia(s, d, D))
-    val embAll = pinInput(dailyEmb(s, d, D))
-    val bench = dailyBench(s, d)
-    val cfg = DailyIngest.IngestConfig(bloomCapacity = dailyBloomCapacity(s, d))
-    val bloom = graft.text.TextQueries.benchContaminationBloom(bench, fpp = 1e-4)
-    // pin-to-sweep span under try/finally (the dailyIngest discipline):
-    // a gate/collect failure mid-query must not strand the pinned
-    // fixture blocks or the probe caches in storage for the session
-    var probeCaches: Seq[DataFrame] = Nil
-    try {
-      prof("td: bloom built")
-      (0 to D).foreach { i =>
-        DailyIngest.ingestDay(s, docs.where(col("day") === i),
-          media.where(col("day") === i), bench, root, i, cfg,
-          benchBloom = Some(bloom),
-          dayEmb = Some(embAll.where(col("day") === i).drop("day"))): Unit
-      }
-      // ---- victim selection: day-0 SURVIVORS with planted shed copies.
-      // BUILD-IF-ABSENT (persisted beside the ledger): the selection
-      // reads the day-0 OUTPUT the takedown below then mutates, so a
-      // same-session re-run (bench reps; the root is applicationId-
-      // keyed) re-deriving it from the post-takedown output would
-      // select ~nothing while the completion marker short-circuits the
-      // takedown — the probes would then measure a degenerate victim
-      // set and any gate re-evaluation would read spuriously red.
-      prof("td: 4 ingest days")
-      val selDir = s"$root/_gate_victims"
-      val (vDocs, vMedia) =
-        if (new java.io.File(s"$selDir/.done").exists()) (
-          s.read.parquet(s"$selDir/docs").localCheckpoint(true),
-          s.read.parquet(s"$selDir/media").localCheckpoint(true))
-        else {
-          val day0Out = s.read.parquet(DailyIngest.textOut(root, 0)).select("doc_id")
-          val twinBases = docs.where(col("day") === 0 &&
-            col("doc_id") % 11 === 3 &&
-            size(split(trim(col("text")), "\\s+")) >= 25).select("doc_id")
-          val semBases = docs.where(col("day") === 0 &&
-              pmod(col("doc_id"), lit(D + 1)) === 0 && col("doc_id") % 9 === 2 &&
-              col("doc_id") < PlantedTwinBase).select("doc_id")
-            .join(embAll.select("doc_id").distinct(), Seq("doc_id"), "left_semi")
-          val vCand = twinBases.unionByName(semBases).distinct()
-            .join(day0Out, Seq("doc_id"), "left_semi")
-          // pairwise non-near-dup victims: drop BOTH ends of any candidate
-          // pair — a kept near-dup candidate's own planted twin would
-          // otherwise survive expansion's one hop and suppress the shed-twin
-          // re-crawl (A~B, twin(B)~twin(A) but twin(B) possibly < threshold
-          // from A itself)
-          val vPairs = MinHashBandStore.estPairs(
-            docs.join(vCand, Seq("doc_id"), "left_semi"))
-          val vd = vCand
-            .join(vPairs.select(col("id_b").as("doc_id"))
-                .unionByName(vPairs.select(col("id_a").as("doc_id"))),
-              Seq("doc_id"), "left_anti")
-          val m0Out = s.read.parquet(DailyIngest.mediaOut(root, 0)).select("media_id")
-          val mCand = media.where(col("day") === 0 && col("media_id") % 9 === 2)
-            .select("media_id").join(m0Out, Seq("media_id"), "left_semi")
-          val mPairs = DailyIngest.storeParityMediaPairs(
-            media.join(mCand, Seq("media_id"), "left_semi"))
-          val vm = mCand
-            .join(mPairs.select(col("id_b").as("media_id"))
-                .unionByName(mPairs.select(col("id_a").as("media_id"))),
-              Seq("media_id"), "left_anti")
-          vd.write.mode("overwrite").parquet(s"$selDir/docs")
-          vm.write.mode("overwrite").parquet(s"$selDir/media")
-          new java.io.File(s"$selDir/.done").createNewFile(): Unit
-          (s.read.parquet(s"$selDir/docs").localCheckpoint(true),
-           s.read.parquet(s"$selDir/media").localCheckpoint(true))
+    // one scope from before the pins to after the collect (the
+    // dailyIngest discipline): a gate/collect failure mid-query must not
+    // strand the pinned fixture blocks or the probe caches in storage
+    // for the session
+    CacheScope(s) {
+      val docs = pinInput(dailyDocs(s, d, D))
+      val media = pinInput(dailyMedia(s, d, D))
+      val embAll = pinInput(dailyEmb(s, d, D))
+      val bench = dailyBench(s, d)
+      val cfg = DailyIngest.IngestConfig(bloomCapacity = dailyBloomCapacity(s, d))
+      val bloom = graft.text.TextQueries.benchContaminationBloom(bench, fpp = 1e-4)
+      try {
+        prof("td: bloom built")
+        (0 to D).foreach { i =>
+          DailyIngest.ingestDay(s, docs.where(col("day") === i),
+            media.where(col("day") === i), bench, root, i, cfg,
+            benchBloom = Some(bloom),
+            dayEmb = Some(embAll.where(col("day") === i).drop("day"))): Unit
         }
-      prof("td: victim selection")
-      DailyIngest.takedown(s, root, docs, media, vDocs, vMedia, cfg,
-        takedownId = "gate")
-      prof("td: takedown call")
-      // the gate's expansion truth set is takedown's own STAGED victim
-      // set (persisted pre-mutation, reused on retry) — reading it back
-      // both avoids a second four-store expansion pass and verifies the
-      // staging is what actually got forgotten
-      val stageDir = s"$root/_ledger/takedown_gate.victims"
-      val expDocs = s.read.parquet(s"$stageDir/docs").localCheckpoint(true)
-      val expMedia = s.read.parquet(s"$stageDir/media").localCheckpoint(true)
-      // control candidates read POST-takedown (re-run-stable: victims
-      // are out of the output either way, and the expansion anti-join
-      // below excludes them regardless)
-      val day0Out = s.read.parquet(DailyIngest.textOut(root, 0)).select("doc_id")
-      val m0Out = s.read.parquet(DailyIngest.mediaOut(root, 0)).select("media_id")
-      // ---- post-takedown probe day: re-crawls of victim / shed-twin /
-      // control content at fresh ids and urls. Offsets DISJOINT from
-      // every planted-fixture range (which occupy [1<<40, 4<<45)): the
-      // first draft's VR = 1<<45 equalled PlantedSemTwinBase, so a
-      // semantic victim's re-crawl carried its own planted twin's id —
-      // and the probe's same-id exclusion would MASK exactly the
-      // leaked-twin suppression victim_recrawls_novel exists to catch
-      val vr = TakedownVR; val tr = TakedownTR; val cr = TakedownCR
-      def recrawlDocs(bases: DataFrame, off: Long, src: String) = docs
-        .join(bases, Seq("doc_id"), "left_semi")
-        .select((col("doc_id") + off).as("doc_id"),
-          concat(lit(s"https://re.ex/$src/"), col("doc_id").cast("string")).as("url"),
-          col("text"), col("lang"), lit(src).as("source"),
-          col("n_chars"), lit(D + 1).cast("int").as("day"))
-      val shedTwins = expDocs.join(vDocs, Seq("doc_id"), "left_anti")
-        .where(col("doc_id") >= PlantedTwinBase && col("doc_id") < PlantedFreshBase)
-      val controls = day0Out.join(expDocs, Seq("doc_id"), "left_anti")
-        .where(col("doc_id") % 7 === 1 && col("doc_id") < PlantedTwinBase)
-        .limit(10).localCheckpoint(true)
-      // twin re-crawls probe in a SEPARATE day below: a victim's
-      // re-crawl and its shed twin's re-crawl are near-dups of EACH
-      // OTHER, so sharing a probe day would (correctly) shed the
-      // later-id twin within-day — which is pipeline behavior, not
-      // store memory, and not what this gate measures
-      // the probe inputs are TINY (victims + controls) but their plans
-      // embed recrawl joins against the pinned fixtures — pin them too,
-      // so the ~30 Datasets of each probe day analyze a leaf-sized plan
-      // (the pinInput rationale, one hop further down)
-      val probeDocs = pinInput(recrawlDocs(vDocs, vr, "vrecrawl")
-        .unionByName(recrawlDocs(controls, cr, "crecrawl")))
-      val probeEmb = pinInput(embAll.drop("day")
-        .join(vDocs, Seq("doc_id"), "left_semi")
-        .select((col("doc_id") + vr).as("doc_id"), col("embedding")))
-      def recrawlMedia(bases: DataFrame, off: Long) = media
-        .join(bases, Seq("media_id"), "left_semi")
-        .select((col("media_id") + off).as("media_id"), col("kind"),
-          col("mime"), col("width"), col("height"), col("n_frames"),
-          col("sample_rate"), col("content"), lit(D + 1).cast("int").as("day"))
-      val mControls = m0Out.join(expMedia, Seq("media_id"), "left_anti")
-        .where(col("media_id") % 7 === 1).limit(6).localCheckpoint(true)
-      val probeMedia = pinInput(recrawlMedia(vMedia, vr)
-        .unionByName(recrawlMedia(mControls, cr)))
-      // tracked probes + sweep: two probe days per call would pin two
-      // cache sets per bench rep under storage LRU (the dailyIngest
-      // bench-loop discipline)
-      prof("td: probe inputs prepared")
-      val (ptxt, pmed, caches1) = DailyIngest.probeDayTracked(s, probeDocs,
-        probeMedia, root, benchBloom = bloom,
-        dayEmb = Some(probeEmb), cfg = cfg)
-      probeCaches ++= caches1
-      prof("td: probe day 1 (lazy)")
-      val (ptxt2, _, caches2) = DailyIngest.probeDayTracked(s,
-        pinInput(recrawlDocs(shedTwins, tr, "trecrawl")),
-        probeMedia.where(lit(false)),
-        root, benchBloom = bloom,
-        dayEmb = Some(embAll.drop("day").limit(0)), cfg = cfg)
-      probeCaches ++= caches2
-      val out = ptxt.select(col("doc_id").as("id"), lit("text").as("family"))
-        .unionByName(ptxt2.select(col("doc_id").as("id"), lit("text2").as("family")))
-        .unionByName(pmed.select(col("media_id").as("id"), lit("media").as("family")))
-        .unionByName(expDocs.select(col("doc_id").as("id"), lit("vdoc").as("family")))
-        .unionByName(expMedia.select(col("media_id").as("id"), lit("vmedia").as("family")))
-        .unionByName(vDocs.select(col("doc_id").as("id"), lit("vdoc_orig").as("family")))
-        .unionByName(vMedia.select(col("media_id").as("id"), lit("vmedia_orig").as("family")))
-        .unionByName(shedTwins.select(col("doc_id").as("id"), lit("shed_twin").as("family")))
-        .unionByName(controls.select(col("doc_id").as("id"), lit("control_doc").as("family")))
-        .unionByName(mControls.select(col("media_id").as("id"), lit("control_media").as("family")))
-      prof("td: probe day 2 (lazy)")
-      val rows = out.collect()
-      prof("td: union collect")
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-    } finally {
-      DailyIngest.sweepCaches(s, rddsAtStart, probeCaches)
-      bloom.destroy()
+        // ---- victim selection: day-0 SURVIVORS with planted shed copies.
+        // BUILD-IF-ABSENT (persisted beside the ledger): the selection
+        // reads the day-0 OUTPUT the takedown below then mutates, so a
+        // same-session re-run (bench reps; the root is applicationId-
+        // keyed) re-deriving it from the post-takedown output would
+        // select ~nothing while the completion marker short-circuits the
+        // takedown — the probes would then measure a degenerate victim
+        // set and any gate re-evaluation would read spuriously red.
+        prof("td: 4 ingest days")
+        val selDir = s"$root/_gate_victims"
+        val (vDocs, vMedia) =
+          if (new java.io.File(s"$selDir/.done").exists()) (
+            s.read.parquet(s"$selDir/docs").localCheckpoint(true),
+            s.read.parquet(s"$selDir/media").localCheckpoint(true))
+          else {
+            val day0Out = s.read.parquet(DailyIngest.textOut(root, 0)).select("doc_id")
+            val twinBases = docs.where(col("day") === 0 &&
+              col("doc_id") % 11 === 3 &&
+              size(split(trim(col("text")), "\\s+")) >= 25).select("doc_id")
+            val semBases = docs.where(col("day") === 0 &&
+                pmod(col("doc_id"), lit(D + 1)) === 0 && col("doc_id") % 9 === 2 &&
+                col("doc_id") < PlantedTwinBase).select("doc_id")
+              .join(embAll.select("doc_id").distinct(), Seq("doc_id"), "left_semi")
+            val vCand = twinBases.unionByName(semBases).distinct()
+              .join(day0Out, Seq("doc_id"), "left_semi")
+            // pairwise non-near-dup victims: drop BOTH ends of any candidate
+            // pair — a kept near-dup candidate's own planted twin would
+            // otherwise survive expansion's one hop and suppress the shed-twin
+            // re-crawl (A~B, twin(B)~twin(A) but twin(B) possibly < threshold
+            // from A itself)
+            val vPairs = MinHashBandStore.estPairs(
+              docs.join(vCand, Seq("doc_id"), "left_semi"))
+            val vd = vCand
+              .join(vPairs.select(col("id_b").as("doc_id"))
+                  .unionByName(vPairs.select(col("id_a").as("doc_id"))),
+                Seq("doc_id"), "left_anti")
+            val m0Out = s.read.parquet(DailyIngest.mediaOut(root, 0)).select("media_id")
+            val mCand = media.where(col("day") === 0 && col("media_id") % 9 === 2)
+              .select("media_id").join(m0Out, Seq("media_id"), "left_semi")
+            val mPairs = DailyIngest.storeParityMediaPairs(
+              media.join(mCand, Seq("media_id"), "left_semi"))
+            val vm = mCand
+              .join(mPairs.select(col("id_b").as("media_id"))
+                  .unionByName(mPairs.select(col("id_a").as("media_id"))),
+                Seq("media_id"), "left_anti")
+            vd.write.mode("overwrite").parquet(s"$selDir/docs")
+            vm.write.mode("overwrite").parquet(s"$selDir/media")
+            new java.io.File(s"$selDir/.done").createNewFile(): Unit
+            (s.read.parquet(s"$selDir/docs").localCheckpoint(true),
+             s.read.parquet(s"$selDir/media").localCheckpoint(true))
+          }
+        prof("td: victim selection")
+        DailyIngest.takedown(s, root, docs, media, vDocs, vMedia, cfg,
+          takedownId = "gate")
+        prof("td: takedown call")
+        // the gate's expansion truth set is takedown's own STAGED victim
+        // set (persisted pre-mutation, reused on retry) — reading it back
+        // both avoids a second four-store expansion pass and verifies the
+        // staging is what actually got forgotten
+        val stageDir = s"$root/_ledger/takedown_gate.victims"
+        val expDocs = s.read.parquet(s"$stageDir/docs").localCheckpoint(true)
+        val expMedia = s.read.parquet(s"$stageDir/media").localCheckpoint(true)
+        // control candidates read POST-takedown (re-run-stable: victims
+        // are out of the output either way, and the expansion anti-join
+        // below excludes them regardless)
+        val day0Out = s.read.parquet(DailyIngest.textOut(root, 0)).select("doc_id")
+        val m0Out = s.read.parquet(DailyIngest.mediaOut(root, 0)).select("media_id")
+        // ---- post-takedown probe day: re-crawls of victim / shed-twin /
+        // control content at fresh ids and urls. Offsets DISJOINT from
+        // every planted-fixture range (which occupy [1<<40, 4<<45)): the
+        // first draft's VR = 1<<45 equalled PlantedSemTwinBase, so a
+        // semantic victim's re-crawl carried its own planted twin's id —
+        // and the probe's same-id exclusion would MASK exactly the
+        // leaked-twin suppression victim_recrawls_novel exists to catch
+        val vr = TakedownVR; val tr = TakedownTR; val cr = TakedownCR
+        def recrawlDocs(bases: DataFrame, off: Long, src: String) = docs
+          .join(bases, Seq("doc_id"), "left_semi")
+          .select((col("doc_id") + off).as("doc_id"),
+            concat(lit(s"https://re.ex/$src/"), col("doc_id").cast("string")).as("url"),
+            col("text"), col("lang"), lit(src).as("source"),
+            col("n_chars"), lit(D + 1).cast("int").as("day"))
+        val shedTwins = expDocs.join(vDocs, Seq("doc_id"), "left_anti")
+          .where(col("doc_id") >= PlantedTwinBase && col("doc_id") < PlantedFreshBase)
+        val controls = day0Out.join(expDocs, Seq("doc_id"), "left_anti")
+          .where(col("doc_id") % 7 === 1 && col("doc_id") < PlantedTwinBase)
+          .limit(10).localCheckpoint(true)
+        // twin re-crawls probe in a SEPARATE day below: a victim's
+        // re-crawl and its shed twin's re-crawl are near-dups of EACH
+        // OTHER, so sharing a probe day would (correctly) shed the
+        // later-id twin within-day — which is pipeline behavior, not
+        // store memory, and not what this gate measures
+        // the probe inputs are TINY (victims + controls) but their plans
+        // embed recrawl joins against the pinned fixtures — pin them too,
+        // so the ~30 Datasets of each probe day analyze a leaf-sized plan
+        // (the pinInput rationale, one hop further down)
+        val probeDocs = pinInput(recrawlDocs(vDocs, vr, "vrecrawl")
+          .unionByName(recrawlDocs(controls, cr, "crecrawl")))
+        val probeEmb = pinInput(embAll.drop("day")
+          .join(vDocs, Seq("doc_id"), "left_semi")
+          .select((col("doc_id") + vr).as("doc_id"), col("embedding")))
+        def recrawlMedia(bases: DataFrame, off: Long) = media
+          .join(bases, Seq("media_id"), "left_semi")
+          .select((col("media_id") + off).as("media_id"), col("kind"),
+            col("mime"), col("width"), col("height"), col("n_frames"),
+            col("sample_rate"), col("content"), lit(D + 1).cast("int").as("day"))
+        val mControls = m0Out.join(expMedia, Seq("media_id"), "left_anti")
+          .where(col("media_id") % 7 === 1).limit(6).localCheckpoint(true)
+        val probeMedia = pinInput(recrawlMedia(vMedia, vr)
+          .unionByName(recrawlMedia(mControls, cr)))
+        // both probe days cache inside the scope: two probe days per call
+        // would otherwise pin two cache sets per bench rep under storage
+        // LRU (the dailyIngest bench-loop discipline)
+        prof("td: probe inputs prepared")
+        val (ptxt, pmed) = DailyIngest.probeDay(s, probeDocs,
+          probeMedia, bench, root, benchBloom = Some(bloom),
+          dayEmb = Some(probeEmb), cfg = cfg)
+        prof("td: probe day 1 (lazy)")
+        val (ptxt2, _) = DailyIngest.probeDay(s,
+          pinInput(recrawlDocs(shedTwins, tr, "trecrawl")),
+          probeMedia.where(lit(false)),
+          bench, root, benchBloom = Some(bloom),
+          dayEmb = Some(embAll.drop("day").limit(0)), cfg = cfg)
+        val out = ptxt.select(col("doc_id").as("id"), lit("text").as("family"))
+          .unionByName(ptxt2.select(col("doc_id").as("id"), lit("text2").as("family")))
+          .unionByName(pmed.select(col("media_id").as("id"), lit("media").as("family")))
+          .unionByName(expDocs.select(col("doc_id").as("id"), lit("vdoc").as("family")))
+          .unionByName(expMedia.select(col("media_id").as("id"), lit("vmedia").as("family")))
+          .unionByName(vDocs.select(col("doc_id").as("id"), lit("vdoc_orig").as("family")))
+          .unionByName(vMedia.select(col("media_id").as("id"), lit("vmedia_orig").as("family")))
+          .unionByName(shedTwins.select(col("doc_id").as("id"), lit("shed_twin").as("family")))
+          .unionByName(controls.select(col("doc_id").as("id"), lit("control_doc").as("family")))
+          .unionByName(mControls.select(col("media_id").as("id"), lit("control_media").as("family")))
+        prof("td: probe day 2 (lazy)")
+        val rows = out.collect()
+        prof("td: union collect")
+        s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+      } finally bloom.destroy()
     }
   } { (s, d, res) =>
     import graft.examples.DailyIngest
@@ -3318,18 +3306,6 @@ object OpsQueries {
     import graft.examples.DailyIngest
     val D = IngestDays
     val root = dailyRoot(s, d) + "_audit"
-    val rddsAtStart = DailyIngest.rddIds(s)
-    // ledger-conditional pinning: the steady-state bench rep short-
-    // circuits every day on its marker and never evaluates the fixture
-    // frames — an unconditional eager pin materialized day-sized inputs
-    // per rep for nothing (measured r19: 1.24 → 2.7–3.6 s on this query)
-    val pin: DataFrame => DataFrame =
-      if (DailyIngest.allDaysIngested(s, root, D + 1)) identity else pinInput
-    val docs = pin(dailyDocs(s, d, D))
-    val media = pin(dailyMedia(s, d, D))
-    val emb = pin(dailyEmb(s, d, D))
-    val bench = dailyBench(s, d)
-    val cfg = DailyIngest.IngestConfig(bloomCapacity = dailyBloomCapacity(s, d))
     def dirMd5(p: String): String = {
       val f = new java.io.File(p)
       if (!f.exists()) "absent"
@@ -3344,16 +3320,27 @@ object OpsQueries {
     def logsMd5 = (0 to D).map(i =>
       dirMd5(DailyIngest.dropLogOut(root, i)) + "|" +
         dirMd5(DailyIngest.mediaDropLogOut(root, i))).mkString(";")
-    // pins swept in finally (not after a straight-line span): a gate
-    // or ingest failure mid-query must not strand the day-sized pinned
-    // blocks for the session — the returned frame reads only the
+    // pins released with the scope (not after a straight-line span): a
+    // gate or ingest failure mid-query must not strand the day-sized
+    // pinned blocks for the session — the returned frame reads only the
     // drop-log parquet, never the pins
-    val rerunStable = try {
+    val rerunStable = CacheScope(s) {
+      // ledger-conditional pinning: the steady-state bench rep short-
+      // circuits every day on its marker and never evaluates the fixture
+      // frames — an unconditional eager pin materialized day-sized inputs
+      // per rep for nothing (measured r19: 1.24 → 2.7–3.6 s on this query)
+      val pin: DataFrame => DataFrame =
+        if (DailyIngest.allDaysIngested(s, root, D + 1)) identity else pinInput
+      val docs = pin(dailyDocs(s, d, D))
+      val media = pin(dailyMedia(s, d, D))
+      val emb = pin(dailyEmb(s, d, D))
+      val bench = dailyBench(s, d)
+      val cfg = DailyIngest.IngestConfig(bloomCapacity = dailyBloomCapacity(s, d))
       DailyIngest.run(s, docs, media, bench, root, D + 1, cfg, emb = Some(emb))
       val snap = logsMd5
       DailyIngest.run(s, docs, media, bench, root, D + 1, cfg, emb = Some(emb))
       logsMd5 == snap
-    } finally DailyIngest.sweepCaches(s, rddsAtStart, Nil)
+    }
     val docSchema = org.apache.spark.sql.types.StructType.fromDDL(
       "doc_id bigint, reason string")
     val mediaSchema = org.apache.spark.sql.types.StructType.fromDDL(
@@ -3512,29 +3499,31 @@ object OpsQueries {
     import graft.text.TextFunctions
     val D = 2
     val root = dailyRoot(s, d) + "_budget"
-    val rddsAtStart = DailyIngest.rddIds(s)
-    // ledger-conditional pin (see ingestAudit): the steady-state rep
-    // short-circuits every day — only the budget aggregate below reads
-    // docs then, and it is cheaper against the raw pruned plan (day
-    // filter + text column only) than against a full eager pin
-    val docs =
-      if (DailyIngest.allDaysIngested(s, root, D + 1)) dailyDocs(s, d, D)
-      else pinInput(dailyDocs(s, d, D))
-    val media = dailyMedia(s, d, D).where(lit(false))
-    val bench = dailyBench(s, d)
-    // /8 of the day-0 INCOMING mass: the cap must undercut the
-    // POST-DEDUP survivor mass at every SF (at sf0.1 the dedup stages
-    // shed a larger fraction than at sf0.01 — an incoming/3 budget
-    // rejected nothing there), so the rejection gates stay non-vacuous
-    val budget = docs.where(col("day") === 0)
-      .agg(coalesce(sum(TextFunctions.bpeTokenCount(col("text"))), lit(0L)))
-      .head.getLong(0) / 8
-    val cfg = DailyIngest.IngestConfig(
-      bloomCapacity = dailyBloomCapacity(s, d),
-      dailyBpeBudget = Some(budget))
-    try DailyIngest.run(s, docs, media, bench, root, D + 1, cfg)
-    // pins released: the returned frame reads only the per-day outputs
-    finally DailyIngest.sweepCaches(s, rddsAtStart, Nil)
+    // pins released with the scope: the returned frame reads only the
+    // per-day outputs
+    val budget = CacheScope(s) {
+      // ledger-conditional pin (see ingestAudit): the steady-state rep
+      // short-circuits every day — only the budget aggregate below reads
+      // docs then, and it is cheaper against the raw pruned plan (day
+      // filter + text column only) than against a full eager pin
+      val docs =
+        if (DailyIngest.allDaysIngested(s, root, D + 1)) dailyDocs(s, d, D)
+        else pinInput(dailyDocs(s, d, D))
+      val media = dailyMedia(s, d, D).where(lit(false))
+      val bench = dailyBench(s, d)
+      // /8 of the day-0 INCOMING mass: the cap must undercut the
+      // POST-DEDUP survivor mass at every SF (at sf0.1 the dedup stages
+      // shed a larger fraction than at sf0.01 — an incoming/3 budget
+      // rejected nothing there), so the rejection gates stay non-vacuous
+      val budget = docs.where(col("day") === 0)
+        .agg(coalesce(sum(TextFunctions.bpeTokenCount(col("text"))), lit(0L)))
+        .head.getLong(0) / 8
+      val cfg = DailyIngest.IngestConfig(
+        bloomCapacity = dailyBloomCapacity(s, d),
+        dailyBpeBudget = Some(budget))
+      DailyIngest.run(s, docs, media, bench, root, D + 1, cfg)
+      budget
+    }
     (0 to D).map(i =>
       s.read.parquet(DailyIngest.textOut(root, i))
         .select(col("doc_id"), col("source"), col("n_bpe"),

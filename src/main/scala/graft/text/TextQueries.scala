@@ -659,31 +659,18 @@ object TextQueries {
     * exact form pays before its broadcast. CACHE LIFETIME: the shingle
     * frame backing the (lazy) returned DataFrame is cached for the
     * sketch-build + tot/hit triple consumption and cannot be unpersisted
-    * here; it is released by storage LRU or `spark.catalog.clearCache()`
-    * (Bench clears between queries) — same contract as the Dedup sketch
-    * operators. */
+    * here; it belongs to the caller's [[graft.CacheScope]] (a looping
+    * caller wraps each call and its consumers in one), or with no scope
+    * open to storage LRU / `spark.catalog.clearCache()` (Bench clears
+    * between queries). */
   def contaminationBloomVs(docs: org.apache.spark.sql.DataFrame,
       isBench: org.apache.spark.sql.Column, threshold: Double, fpp: Double,
-      expectedItems: Option[Long] = None): org.apache.spark.sql.DataFrame =
-    contaminationBloomVsTracked(docs, isBench, threshold, fpp, expectedItems)._1
-
-  /** [[contaminationBloomVs]] exposing its internal cached shingle
-    * frame, for LOOPING callers (the daily-ingest driver runs one
-    * decontamination pass per day — without a release, each day pins a
-    * day-sized exploded-shingle cache entry for the session). Returns
-    * (result, cachedShingles); the caller owns the unpersist, AFTER the
-    * result's consumers are materialized. */
-  private[graft] def contaminationBloomVsTracked(
-      docs: org.apache.spark.sql.DataFrame,
-      isBench: org.apache.spark.sql.Column, threshold: Double, fpp: Double,
-      expectedItems: Option[Long] = None)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val sh = docs
+      expectedItems: Option[Long] = None): org.apache.spark.sql.DataFrame = {
+    val sh = graft.CacheScope.cache(docs
       .where(col("text").isNotNull)
       .select(col("doc_id"),
         explode(shinglesFast(3)(tokens(col("text")))).as("shingle"),
-        isBench.as("is_bench"))
-      .cache()
+        isBench.as("is_bench")))
     // sentinel / expectedItems / membership-UDF semantics live in
     // graft.functions.Sketches (shared with the span, streaming, and
     // novelty bloom operators); the filter runs pre-aggregation so the
@@ -700,7 +687,7 @@ object TextQueries {
         coalesce(col("n_hit"), lit(0L)).as("n_hit"),
         (coalesce(col("n_hit"), lit(0L)).cast("double") / col("n_grams"))
           .as("contamination"))
-      .where(col("contamination") >= threshold) -> sh
+      .where(col("contamination") >= threshold)
   }
 
   /** Build the BENCHMARK side's shingle bloom once — for loops that

@@ -69,16 +69,13 @@ class DailyProfileSpec extends AnyFunSuite {
 
     // ---- steady-state probe day, end to end, twice (rep-2 shape)
     (1 to 2).foreach { i =>
-      time(s"probeDay end-to-end #$i") {
-        val rddsBefore = DailyIngest.rddIds(s)
-        val (txt, med, caches) = DailyIngest.probeDayTracked(s,
-          docs.where(col("day") === D), media.where(col("day") === D), root,
-          benchBloom = bloom,
+      time(s"probeDay end-to-end #$i")(CacheScope(s) {
+        val (txt, med) = DailyIngest.probeDay(s,
+          docs.where(col("day") === D), media.where(col("day") === D), bench, root,
+          benchBloom = Some(bloom),
           dayEmb = Some(emb.where(col("day") === D).drop("day")), cfg = cfg)
-        val n = txt.count() + med.count()
-        DailyIngest.sweepCaches(s, rddsBefore, caches)
-        n
-      }
+        txt.count() + med.count()
+      })
     }
 
     // ---- construction vs execution split, plain vs checkpointed inputs
@@ -86,24 +83,24 @@ class DailyProfileSpec extends AnyFunSuite {
     val dayMedia = media.where(col("day") === D)
     val dayEmb = emb.where(col("day") === D).drop("day")
     (1 to 2).foreach { i =>
-      val rb1 = DailyIngest.rddIds(s)
-      val (t1, m1, c1) = time(s"plain construction #$i")(
-        DailyIngest.probeDayTracked(s, dayDocs, dayMedia, root,
-          benchBloom = bloom, dayEmb = Some(dayEmb), cfg = cfg))
-      time(s"plain execution #$i")(t1.count() + m1.count())
-      DailyIngest.sweepCaches(s, rb1, c1)
+      CacheScope(s) {
+        val (t1, m1) = time(s"plain construction #$i")(
+          DailyIngest.probeDay(s, dayDocs, dayMedia, bench, root,
+            benchBloom = Some(bloom), dayEmb = Some(dayEmb), cfg = cfg))
+        time(s"plain execution #$i")(t1.count() + m1.count())
+      }
     }
     val ddCp = time("checkpoint day inputs")( (
       dayDocs.localCheckpoint(true),
       dayMedia.localCheckpoint(true),
       dayEmb.localCheckpoint(true)) )
     (1 to 2).foreach { i =>
-      val rb2 = DailyIngest.rddIds(s)
-      val (t2, m2, c2) = time(s"cp construction #$i")(
-        DailyIngest.probeDayTracked(s, ddCp._1, ddCp._2, root,
-          benchBloom = bloom, dayEmb = Some(ddCp._3), cfg = cfg))
-      time(s"cp execution #$i")(t2.count() + m2.count())
-      DailyIngest.sweepCaches(s, rb2, c2)
+      CacheScope(s) {
+        val (t2, m2) = time(s"cp construction #$i")(
+          DailyIngest.probeDay(s, ddCp._1, ddCp._2, bench, root,
+            benchBloom = Some(bloom), dayEmb = Some(ddCp._3), cfg = cfg))
+        time(s"cp execution #$i")(t2.count() + m2.count())
+      }
     }
     bloom.destroy()
   }

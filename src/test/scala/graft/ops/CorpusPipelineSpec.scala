@@ -89,6 +89,46 @@ class CorpusPipelineSpec extends AnyFunSuite {
       .count()
     assert(bad == 0, "shard ids must be contiguous 0..max per source")
   }
+
+  // phase 1 of an ingest day owns its caches: it leaves the persistent
+  // RDDs as it found them on return and when the day throws part-way
+  private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  private def computeDay0(mediaOf: org.apache.spark.sql.DataFrame =>
+      org.apache.spark.sql.DataFrame): Unit = {
+    import graft.examples.DailyIngest
+    import org.apache.spark.sql.functions.col
+    val dir = "/root/testdata/sf0.001"
+    assume(new java.io.File(s"$dir/documents.parquet").exists())
+    val root = java.nio.file.Files.createTempDirectory("di-release").toString
+    val docs = OpsQueries.dailyDocs(spark, dir, 1).where(col("day") === 0)
+    val media = mediaOf(OpsQueries.dailyMedia(spark, dir, 1).where(col("day") === 0))
+    val bloom = graft.text.TextQueries.benchContaminationBloom(
+      OpsQueries.dailyBench(spark, dir), fpp = 1e-4)
+    try DailyIngest.ingestDayCompute(spark, docs, media, bloom, root, 0): Unit
+    finally bloom.destroy()
+  }
+
+  test("ingestDayCompute leaves the persistent RDDs as it found them on return") {
+    val before = persisted
+    computeDay0(identity)
+    assert(persisted == before)
+  }
+
+  test("ingestDayCompute leaves the persistent RDDs as it found them when the day throws") {
+    import org.apache.spark.sql.functions._
+    val before = persisted
+    // the media branch is evaluated after the text survivors are
+    // written, so the day's text caches are live when this row throws
+    val e = intercept[Exception] {
+      computeDay0(m => m.withColumn("content",
+        when(col("media_id") === m.agg(min("media_id")).head.getLong(0),
+          raise_error(lit("boom")).cast("binary")).otherwise(col("content"))))
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("boom")), e.toString)
+    assert(persisted == before)
+  }
 }
 
 /** Daily-ingest keystone invariants the gated query can't exercise:

@@ -35,9 +35,11 @@ class BhCostProbeSpec extends AnyFunSuite {
       val js = Array.fill(k)(rng.nextInt(n)).filter(_ != i).distinct.sorted
       AffRow(i, js, js.map(_ => 1.0 / (n.toDouble * k)))
     }
-    // the partitioning prepareAffinities gives the cached adjacency
+    // the partitioning and the localCheckpoint prepareAffinities gives
+    // the adjacency: a parallelized RDD's partitions carry their rows, so
+    // with a plain cache every task of every job would ship them
     val parts = math.max(1, math.min(sc.defaultParallelism, n / 256))
-    val rdd = sc.parallelize(rows, parts).cache()
+    val rdd = sc.parallelize(rows, parts).localCheckpoint()
     rdd.count()
     val tree = FlatSPTree.build(y, n, d)
     val ser = new org.apache.spark.serializer.KryoSerializer(sc.getConf).newInstance()
